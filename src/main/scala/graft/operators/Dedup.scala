@@ -464,25 +464,20 @@ object Dedup {
     // each a fixed scheduling round-trip — the dominant cost when the pair
     // graph is small (near-dup edges after exact verify are a vanishing
     // fraction of any corpus; r19 probe: ~20 sub-30 ms jobs carried half of
-    // image_dedup_canonical). Below the config bound the edge list is a
-    // bounded driver artifact (the Lloyd-round pattern): collect it, run
-    // union-find, and hand back a one-job frame. Same min-id labels —
+    // image_dedup_canonical). Below the [[LocalRoute]] bound (counted in
+    // DIRECTED edges; the barrier's fused count spares an over-bound graph
+    // the probe) the edge list is a bounded driver artifact: collect it,
+    // run union-find, and hand back a one-job frame. Same min-id labels —
     // union-find components ARE connected components, and the label is the
-    // component min either way. LongType ids only (every catalog caller);
-    // anything else keeps the distributed route.
-    val localMax = spark.conf.getOption("spark.graft.clusterPairsLocalMaxEdges")
-      .map(_.toLong).getOrElse(1L << 20)
-    val srcType = edges.schema("src").dataType
-    // null endpoints keep the distributed route: its join semantics define
-    // what null-keyed edges do (they drop out of neighborMin), while the
-    // union-find's getLong would throw — the routes must be output-identical
-    // on ANY input, not just the catalog's
-    val localRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (nDirected <= 2L * localMax && srcType == org.apache.spark.sql.types.LongType
-          && edges.schema("dst").dataType == srcType) {
-        val r = edges.collect()
-        if (r.exists(x => x.isNullAt(0) || x.isNullAt(1))) None else Some(r)
-      } else None
+    // component min either way. LongType ids only (every catalog caller;
+    // the union gives src and dst one type); anything else keeps the
+    // distributed route, as do null endpoints (they drop out of
+    // neighborMin's join there, while the union-find's getLong would throw).
+    val localRows =
+      if (edges.schema("src").dataType == org.apache.spark.sql.types.LongType &&
+          nDirected <= LocalRoute.maxRows(spark))
+        LocalRoute.collect(edges, Seq("src", "dst"))
+      else None
     if (localRows.isDefined) {
       val rows = localRows.get
       val idx = new scala.collection.mutable.LongMap[Int](rows.length * 2)

@@ -47,11 +47,11 @@ object LinkAnalysis {
       s"pageRank: damping must be in (0,1), got $damping")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // Small-graph route (the clusterPairs/BPE/Lloyd discipline): below the
-    // config bound the edge list is a bounded driver artifact — collect it
-    // once and run the `iterations` rounds locally. The distributed loop
-    // costs ~6 scheduler jobs PER ROUND at bench SF (AQE stage
-    // materializations + a fresh broadcast build of the static edge table
-    // every round), all fixed scheduling cost; locally the same recurrence
+    // [[LocalRoute]] bound the edge list is a bounded driver artifact —
+    // collect it once and run the `iterations` rounds locally. The
+    // distributed loop costs ~6 scheduler jobs PER ROUND at bench SF (AQE
+    // stage materializations + a fresh broadcast build of the static edge
+    // table every round), all fixed scheduling cost; locally the same recurrence
     // is a tight array loop. The recurrence is replicated exactly —
     // pr'(v) = (1-d)/n + d·(csum(v) + dmass/n), dmass re-derived from the
     // NEW ranks each round — with contributions accumulated in sorted
@@ -63,23 +63,11 @@ object LinkAnalysis {
     // reduction order). LongType ids and null-free edges only — anything
     // else keeps the distributed rounds. An empty local edge list still
     // REQUIREs below (same contract as the distributed route).
-    val localMax = edges.sparkSession.conf
-      .getOption("spark.graft.pageRankLocalMaxEdges")
-      .map(_.toLong).getOrElse(1L << 20)
     val longIds = e.schema("src").dataType == org.apache.spark.sql.types.LongType &&
       e.schema("dst").dataType == org.apache.spark.sql.types.LongType
-    val localEdges: Option[Array[org.apache.spark.sql.Row]] =
-      if (longIds && localMax > 0 && localMax < Int.MaxValue) {
-        val r = e.limit(localMax.toInt + 1).collect()
-        if (r.length > localMax || r.exists(x => x.isNullAt(0) || x.isNullAt(1)))
-          None
-        else Some(r)
-      } else None
-    localEdges match {
-      case Some(rows) => return pageRankLocal(
-        edges.sparkSession, rows, iterations, damping)
-      case None =>
-    }
+    val localEdges = if (longIds) LocalRoute.collect(e, Seq("src", "dst")) else None
+    if (localEdges.isDefined)
+      return pageRankLocal(edges.sparkSession, localEdges.get, iterations, damping)
     // out-degree rides ON the node/rank frame (0 for dangling): the
     // per-round dangling mass is then a filtered SUM over the round's own
     // barrier — fused into the barrier action below — instead of the old

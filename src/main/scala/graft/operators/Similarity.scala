@@ -719,31 +719,22 @@ object Similarity {
   private def collectedCentroids(centroids: DataFrame,
       what: String): (Seq[Column], Array[Array[Float]], Array[Double]) = {
     val idType = centroids.schema("cell_id").dataType
-    val rows = collectSortedById(centroids.select(col("cell_id"), col("cvec")), idType)
+    val rows = collectSortedById(centroids.select(col("cell_id"), col("cvec")),
+      LocalRoute.ordering(idType))
     require(rows.nonEmpty, s"$what: empty centroid table")
     centroidSet(rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)), idType)
   }
 
   /** Driver-side twin of the old per-cell assembly aggregate
    * (`array_sort(collect_list(struct(pos, m)))` + float cast): group the
-   * (cell_id, pos, mean) rows by cell, order positions ascending, cast
+   * (key, pos, mean) rows by key, order positions ascending, cast
    * double→float — exactly what the distributed form computed, over the
-   * same avg values. Cells ordered by `byId` (Spark's ASC NULLS FIRST). */
-  private def assembleCentroidRows(rows: Seq[(Any, Int, Double)],
-      byId: Ordering[Any]): Seq[(Any, Array[Float])] =
-    rows.groupBy(_._1).toSeq.sortBy(_._1)(byId).map { case (cell, ps) =>
-      (cell, ps.sortBy(_._2).map(_._3.toFloat).toArray)
+   * same avg values. Keys ordered by `byKey` (Spark's ASC NULLS FIRST). */
+  private def assembleCentroidRows[K](rows: Seq[(K, Int, Double)],
+      byKey: Ordering[K]): Seq[(K, Array[Float])] =
+    rows.groupBy(_._1).toSeq.sortBy(_._1)(byKey).map { case (key, ps) =>
+      (key, ps.sortBy(_._2).map(_._3.toFloat).toArray)
     }
-
-  /** Spark's ASC NULLS FIRST as a driver-side comparator (only for the id
-   * types [[idOrdering]] mirrors exactly). */
-  private def nullsFirst(ord: Ordering[Any]): Ordering[Any] = new Ordering[Any] {
-    def compare(a: Any, b: Any): Int =
-      if (a == null && b == null) 0
-      else if (a == null) -1
-      else if (b == null) 1
-      else ord.compare(a, b)
-  }
 
   /** Collect a bounded (config-sized, never data-sized) frame whose FIRST
    * column is an id and sort it driver-side by that id under Spark's own
@@ -751,14 +742,17 @@ object Similarity {
    * only so the argmax index tie-break is deterministic, and a distributed
    * `orderBy().collect()` on a ≤nCells-row frame plans a range-partitioner
    * SAMPLING job plus the sort before the collect (guide §2.6: per-job
-   * scheduling is the dominant cost of these driver-paced rounds). For id
-   * types [[idOrdering]] cannot mirror exactly, the distributed sort is
-   * kept. */
-  private def collectSortedById(df: DataFrame, idType: DataType): Seq[org.apache.spark.sql.Row] =
-    idOrdering(idType) match {
-      case Some(ord) => df.collect().toSeq.sortBy(_.get(0))(nullsFirst(ord))
-      case None => df.orderBy(df.columns.head).collect().toSeq
-    }
+   * scheduling is the dominant cost of these driver-paced rounds). */
+  private def collectSortedById(df: DataFrame,
+      byId: Ordering[Any]): Seq[org.apache.spark.sql.Row] =
+    df.collect().toSeq.sortBy(_.get(0))(byId)
+
+  /** [[collectSortedById]] for a (s, cell_id, cvec) codebook frame: sorted by
+   * (s, cell_id), so rows of equal s are consecutive. */
+  private def collectKeyed(df: DataFrame,
+      byKey: Ordering[(Int, Any)]): Seq[(Int, Any, Array[Float])] =
+    df.collect().toSeq.map(r => (r.getInt(0), r.get(1), r.getSeq[Float](2).toArray))
+      .sortBy(r => (r._1, r._2))(byKey)
 
   /** Winning cell_id for one collected centroid set: the codegen'd argmax
    * index ([[graft.functions.NearestCentroidIndex]] — one tight loop over a
@@ -951,8 +945,9 @@ object Similarity {
    * formulation's arithmetic and ordering EXACTLY (same double-accumulation
    * order as the codegen'd max-cosine, NaN-is-greatest, min-(sim, id)
    * tie-break — SeedingSpec pins path equality), so which path ran is
-   * unobservable in the output. Oversized samples, null ids/vectors, or
-   * non-orderable id types fall back to the distributed rounds.
+   * unobservable in the output. Samples over the cap or the [[LocalRoute]]
+   * bound, and null ids/vectors, take the distributed rounds; ids must be
+   * integral or string ([[LocalRoute.ordering]]).
    */
   def seedFarthestFirst(df: DataFrame, idCol: String, vecCol: String,
       nCells: Int, sampleMod: Int = 1,
@@ -960,72 +955,36 @@ object Similarity {
     val sampleDf = df.filter(pmod(xxhash64(col(idCol)), lit(sampleMod)) === 0)
       .select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
     val idType = sampleDf.schema("cand_id").dataType
+    val byId = LocalRoute.ordering(idType)
+    val emptySample =
+      s"seedFarthestFirst: hash sample is empty (sampleMod=$sampleMod too coarse?)"
     // dim-aware cap: the row cap alone admits collects whose BOXED float
     // payload (~16 B/element) exceeds driver heap at realistic dims —
-    // budget total elements (rows × dim ≤ maxDriverSample × 64) instead.
-    // ONE collect for probe + sample (was a dim-probe job plus a sample
-    // job): collect up to maxDriverSample+1 rows, read dim off the first
-    // row, and derive the dim-aware cap from it. Only when the cap turns
-    // out LARGER than the first collect (dim < 64) and the first collect
-    // hit its limit is a second, wider collect needed — never for the
-    // catalog's dim-64 corpora.
-    def sampleRows(limit: Long): Array[org.apache.spark.sql.Row] = {
-      val rows = sampleDf.limit((math.min(limit, Int.MaxValue - 1L) + 1L).toInt).collect()
-      require(rows.nonEmpty,
-        s"seedFarthestFirst: hash sample is empty (sampleMod=$sampleMod too coarse?)")
-      rows
+    // budget total elements (rows × dim ≤ maxDriverSample × 64, at least
+    // min(1024, maxDriverSample) rows) instead. The probe reads dim off its
+    // own rows; only a sample over maxDriverSample rows at dim < 64 needs a
+    // second, wider probe — never the catalog's dim-64 corpora.
+    def rowCap(r: org.apache.spark.sql.Row): Long = {
+      val dim = if (r.isNullAt(1)) 64 else math.max(1, r.getSeq[Float](1).length)
+      math.max(math.min(1024L, maxDriverSample), maxDriverSample * 64L / dim)
     }
-    val localSeeds: Option[Seq[(Any, Array[Float])]] =
-      idOrdering(idType).flatMap { ord =>
-        val first = sampleRows(maxDriverSample.toLong)
-        val dim =
-          if (first(0).isNullAt(1)) 64
-          else math.max(1, first(0).getSeq[Float](1).length)
-        val rowCap = math.max(1024L, maxDriverSample.toLong * 64L / dim)
-        val rows =
-          if (first.length > maxDriverSample && rowCap > maxDriverSample)
-            sampleRows(rowCap)
-          else first
-        if (rows.length > rowCap || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else Some(farthestFirstLocal(
-          rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)), nCells, ord))
-      }
-    localSeeds match {
-      case Some(seeds) => seedFrame(df, seeds, idType)
+    val key = Seq("cand_id", "cand_vec")
+    val localRows = LocalRoute.collect(sampleDf, key, maxDriverSample) match {
+      case Some(rows) =>
+        require(rows.nonEmpty, emptySample)
+        if (rows.length <= rowCap(rows(0))) Some(rows) else None
+      case None if LocalRoute.maxRows(df.sparkSession) > maxDriverSample =>
+        sampleDf.head(1).headOption.map(rowCap).filter(_ > maxDriverSample)
+          .flatMap(LocalRoute.collect(sampleDf, key, _))
+      case None => None
+    }
+    localRows match {
+      case Some(rows) => seedFrame(df, farthestFirstLocal(
+        rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)), nCells, byId), idType)
       case None =>
         val sample = graft.Materialize(sampleDf)
-        require(!sample.isEmpty,
-          s"seedFarthestFirst: hash sample is empty (sampleMod=$sampleMod too coarse?)")
+        require(!sample.isEmpty, emptySample)
         seedFarthestFirstDistributed(df, sample, nCells, idType)
-    }
-  }
-
-  /** Spark-ordering-faithful comparator for the id types we can mirror
-   * driver-side: numerics natural, strings by unsigned UTF-8 byte order
-   * (Spark compares UTF8String bytes; Java String.compareTo differs on
-   * supplementary characters). */
-  private def idOrdering(dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case LongType => Some(Ordering.by((a: Any) => a.asInstanceOf[Long]))
-      case IntegerType => Some(Ordering.by((a: Any) => a.asInstanceOf[Int]))
-      case ShortType => Some(Ordering.by((a: Any) => a.asInstanceOf[Short]))
-      case ByteType => Some(Ordering.by((a: Any) => a.asInstanceOf[Byte]))
-      case StringType => Some(new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = {
-          val x = a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val y = b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val m = math.min(x.length, y.length)
-          var i = 0
-          while (i < m) {
-            val c = java.lang.Integer.compare(x(i) & 0xff, y(i) & 0xff)
-            if (c != 0) return c
-            i += 1
-          }
-          java.lang.Integer.compare(x.length, y.length)
-        }
-      })
-      case _ => None
     }
   }
 
@@ -1175,6 +1134,8 @@ object Similarity {
       trainSampleMod: Int = 1): DataFrame = {
     require(trainSampleMod >= 1,
       s"trainCentroids: trainSampleMod must be >= 1, got $trainSampleMod")
+    val idType = df.schema(idCol).dataType
+    val byId = LocalRoute.ordering(idType)
     val train =
       if (trainSampleMod == 1) df
       else graft.Materialize(
@@ -1191,15 +1152,10 @@ object Similarity {
     // aggregate plan is unchanged, only where its ≤nCells rows live differs.
     // cvec stays ARRAY<FLOAT> throughout: the codegen'd dot product reads
     // float elements positionally
-    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    // driver-side sort (collectSortedById): a distributed orderBy here adds
-    // a range-sampling job per Lloyd round on a ≤nCells-row frame
-    def collectRows(cdf: DataFrame): Seq[(Any, Array[Float])] =
-      collectSortedById(cdf, idType)
-        .map(r => (r.get(0), r.getSeq[Float](1).toArray))
-    var centRows: Seq[(Any, Array[Float])] = collectRows(seeds.getOrElse(
-      train.orderBy(col(idCol)).limit(nCells)
-        .select(col(idCol).as("cell_id"), col(vecCol).as("cvec"))))
+    var centRows: Seq[(Any, Array[Float])] = collectSortedById(seeds.getOrElse(
+        train.orderBy(col(idCol)).limit(nCells)
+          .select(col(idCol).as("cell_id"), col(vecCol).as("cvec"))), byId)
+      .map(r => (r.get(0), r.getSeq[Float](1).toArray))
     require(centRows.nonEmpty, "trainCentroids: empty seed table")
     (0 until iterations).foreach { _ =>
       val assigned = train
@@ -1214,21 +1170,10 @@ object Similarity {
       // stage job fewer per round (guide §2.6 — these driver-paced rounds
       // are scheduling-bound at bench SF), and the avg values come from the
       // IDENTICAL (cell,pos) aggregate plan, so centroids are bit-equal.
-      // Falls back to the distributed assembly for id types the driver
-      // cannot order exactly.
-      val meansOf: DataFrame = assigned
+      centRows = assembleCentroidRows(assigned
         .select(col("cell_id"), posexplode(col("vec").cast("array<double>")))
         .groupBy(col("cell_id"), col("pos")).agg(avg(col("col")).as("m"))
-      centRows = idOrdering(idType) match {
-        case Some(ord) =>
-          assembleCentroidRows(meansOf.collect().toSeq.map(r =>
-            (r.get(0), r.getInt(1), r.getDouble(2))), nullsFirst(ord))
-        case None => collectRows(meansOf
-          .groupBy(col("cell_id"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("cell_id"),
-            transform(col("pm"), x => x.getField("m").cast("float")).as("cvec")))
-      }
+        .collect().toSeq.map(r => (r.get(0), r.getInt(1), r.getDouble(2))), byId)
     }
     if (trainSampleMod > 1) graft.Materialize.release(train)
     seedFrame(df, centRows, idType)
@@ -1272,20 +1217,12 @@ object Similarity {
    * inner join dropped it; unreachable — every subspace seeds ≥1 code). */
   private def nearestCellKeyed(in: DataFrame, centroids: DataFrame): DataFrame = {
     val idType = centroids.schema("cell_id").dataType
-    // ONE collect, sorted by Spark's own (s, cell_id) ordering — rows of
-    // equal s are consecutive, so per-subspace sets are sorted slices.
-    // Sorted DRIVER-SIDE when the id type allows (collectSortedById
-    // rationale): the codebook is ≤ subspaces × codes rows, and on the
-    // LocalRelation pqTrain now returns, a distributed orderBy is the only
-    // thing forcing a job here at all.
-    val raw = centroids.select(col("s"), col("cell_id"), col("cvec"))
-    val rows = (idOrdering(idType) match {
-      case Some(ord) =>
-        val byId = nullsFirst(ord)
-        raw.collect().toSeq.sortWith((a, b) => a.getInt(0) < b.getInt(0) ||
-          (a.getInt(0) == b.getInt(0) && byId.lt(a.get(1), b.get(1))))
-      case None => raw.orderBy(col("s"), col("cell_id")).collect().toSeq
-    }).map(r => (r.getInt(0), r.get(1), r.getSeq[Float](2).toArray))
+    // ONE collect, sorted DRIVER-SIDE by Spark's own (s, cell_id) ordering
+    // (collectSortedById rationale): the codebook is ≤ subspaces × codes
+    // rows, and on the LocalRelation pqTrain returns, a distributed orderBy
+    // would be the only thing forcing a job here at all.
+    val rows = collectKeyed(centroids.select(col("s"), col("cell_id"), col("cvec")),
+      Ordering.Tuple2(Ordering.Int, LocalRoute.ordering(idType)))
     nearestCellKeyedRows(in, rows, idType)
   }
 
@@ -1324,8 +1261,8 @@ object Similarity {
    * `row_number` window partitioned by `s` — `s` has only `subspaces`
    * distinct values, so the window formulation would funnel corpus ×
    * subspaces rows through `subspaces` tasks (the same hot-key shape as the
-   * old paragraph dedup). Falls back to the window only for non-integral id
-   * types (the aggregate carries BIGINT payloads).
+   * old paragraph dedup). String ids keep the window (the aggregate carries
+   * BIGINT payloads).
    *
    * `trainSampleMod` > 1 trains on the deterministic hash sample of VECTORS
    * (consistent across subspaces) — the FAISS-style "train the quantizer on
@@ -1337,6 +1274,8 @@ object Similarity {
       trainSampleMod: Int = 1): DataFrame = {
     require(trainSampleMod >= 1,
       s"pqTrain: trainSampleMod must be >= 1, got $trainSampleMod")
+    val idType = df.schema(idCol).dataType
+    val byKey = Ordering.Tuple2(Ordering.Int, LocalRoute.ordering(idType))
     val train =
       if (trainSampleMod == 1) df
       else graft.Materialize(
@@ -1349,61 +1288,25 @@ object Similarity {
     // encoding of the whole corpus, which would otherwise be recomputed
     // per iteration (measured 10.9 -> ~4 s on the embed_ivfpq_build gate)
     val subs = graft.Materialize(subVectors(train, idCol, vecCol, dim, subspaces))
-    val integralId = train.schema(train.schema.fieldIndex(idCol)).dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    val idType = train.schema(train.schema.fieldIndex(idCol)).dataType
+    // LocalRoute.ordering above admits only integral and string ids
+    val integralId = idType != org.apache.spark.sql.types.StringType
     // Codebook rows live on the DRIVER across rounds (the trainCentroids
     // discipline — subspaces × codes rows, config-bounded): each round is
     // one aggregate job collected sorted by (s, cell_id), re-entering the
     // next assignment as literals. Values are bit-identical to the old
     // barrier-materialized formulation (same aggregate plan).
-    // driver-side (s, cell_id) sort — same rationale as collectSortedById:
-    // the codebook frame is ≤ subspaces × codes rows and the distributed
-    // orderBy costs a sampling job per Lloyd round
-    def collectKeyed(cdf: DataFrame): Seq[(Int, Any, Array[Float])] =
-      idOrdering(idType) match {
-        case Some(ord) =>
-          val byId = nullsFirst(ord)
-          cdf.collect().toSeq
-            .sortWith((a, b) => a.getInt(0) < b.getInt(0) ||
-              (a.getInt(0) == b.getInt(0) && byId.lt(a.get(1), b.get(1))))
-            .map(r => (r.getInt(0), r.get(1), r.getSeq[Float](2).toArray))
-        case None =>
-          cdf.orderBy(col("s"), col("cell_id")).collect()
-            .toSeq.map(r => (r.getInt(0), r.get(1), r.getSeq[Float](2).toArray))
-      }
-    var centRows: Seq[(Int, Any, Array[Float])] =
-      collectKeyed(pqSeedCandidates(subs, codes, integralId))
+    var centRows = collectKeyed(pqSeedCandidates(subs, codes, integralId), byKey)
     (0 until iterations).foreach { _ =>
       val assigned = nearestCellKeyedRows(subs, centRows, idType)
       // ONE (s, cell, pos)-keyed aggregate per round; the per-codebook-entry
       // array assembly runs driver-side over ≤ subspaces × codes × subdim
       // rows (see trainCentroids — same §2.6 job-count fusion, same
-      // bit-equal avg values). Distributed assembly kept for id types the
-      // driver cannot order exactly.
-      val meansOf = assigned
+      // bit-equal avg values).
+      centRows = assembleCentroidRows(assigned
         .select(col("s"), col("cell_id"), posexplode(col("vec").cast("array<double>")))
         .groupBy(col("s"), col("cell_id"), col("pos")).agg(avg(col("col")).as("m"))
-      centRows = idOrdering(idType) match {
-        case Some(ord) =>
-          val byId = nullsFirst(ord)
-          meansOf.collect().toSeq
-            .map(r => ((r.getInt(0), r.get(1)), (r.getInt(2), r.getDouble(3))))
-            .groupBy(_._1).toSeq
-            .sortWith((a, b) => a._1._1 < b._1._1 ||
-              (a._1._1 == b._1._1 && byId.lt(a._1._2, b._1._2)))
-            .map { case ((s, cell), ps) =>
-              (s, cell, ps.map(_._2).sortBy(_._1).map(_._2.toFloat).toArray)
-            }
-        case None => collectKeyed(meansOf
-          .groupBy(col("s"), col("cell_id"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("s"), col("cell_id"),
-            transform(col("pm"), x => x.getField("m").cast("float")).as("cvec")))
-      }
+        .collect().toSeq.map(r => ((r.getInt(0), r.get(1)), r.getInt(2), r.getDouble(3))),
+        byKey).map { case ((s, cell), cv) => (s, cell, cv) }
     }
     // rounds are driver-collected, so nothing downstream reads the barriers
     // regardless of the iteration count — release unconditionally

@@ -57,26 +57,19 @@ object Tokenize {
     // Small-vocab route (the clusterPairs/Lloyd discipline): every merge
     // round is a driver-synchronized job over the VOCAB table — a
     // scheduling round-trip per merge, which dominates when the vocab is
-    // small. The vocab is (distinct word, count): below the config bound
-    // it is a bounded driver artifact — collect once, run the rounds
+    // small. The vocab is (distinct word, count): below the [[LocalRoute]]
+    // bound it is a bounded driver artifact — collect once, run the rounds
     // locally. Merges are IDENTICAL by construction: pair counts are
     // exact long sums (order-independent), the argmax tie-break
     // (pair_n desc, l, r) and the greedy left-to-right non-overlapping
     // fuse are replicated verbatim. Larger vocabs keep the distributed
     // per-round loop below.
-    // clamped so `localMax + 1` cannot overflow Int when the conf is set to
-    // Int.MaxValue. The over-cap probe deliberately stays the one-job
-    // limit+collect (≤ localMax+1 (word,count) rows — tens of MB, bounded):
-    // a count-first probe would cost the SMALL-vocab route (every catalog
-    // caller) a second vocab-aggregate job to save the large-vocab route
-    // one, the wrong side of the trade for a bound that exists to keep the
-    // common case at one job.
-    val localMax = math.min(Int.MaxValue - 1,
-      spark.conf.getOption("spark.graft.bpeLocalMaxVocab")
-        .map(_.toLong).getOrElse(1L << 20)).toInt
-    val localVocab = vocabDf.limit(localMax + 1).collect()
-    if (localVocab.length <= localMax) {
-      var words = localVocab.map(r => (r.getString(0).split(""), r.getLong(1)))
+    val localVocab = LocalRoute.collect(vocabDf, Nil)
+    if (localVocab.isDefined) {
+      // the argmax's string order must be Spark's (UTF-8 BYTE order), not
+      // Java's UTF-16 code-unit order
+      val byStr = LocalRoute.ordering(org.apache.spark.sql.types.StringType)
+      var words = localVocab.get.map(r => (r.getString(0).split(""), r.getLong(1)))
       val merges = scala.collection.mutable.ListBuffer
         .empty[(Int, String, String, String, Long)]
       var round = 0
@@ -93,29 +86,14 @@ object Tokenize {
           }
         }
         // argmax with the exact orderBy tie-break: pair_n DESC, l ASC, r ASC
-        // — string order must be Spark's (UTF-8 BYTE order), not Java's
-        // UTF-16 code-unit order (they diverge between supplementary chars
-        // and U+E000..U+FFFF)
-        def ltUtf8(a: String, b: String): Boolean = {
-          val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = 0
-          val n = math.min(x.length, y.length)
-          while (i < n) {
-            val c = (x(i) & 0xff) - (y(i) & 0xff)
-            if (c != 0) return c < 0
-            i += 1
-          }
-          x.length < y.length
-        }
         var best: ((String, String), Long) = null
         val it = counts.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
           if (best == null || e.getValue > best._2 ||
               (e.getValue == best._2 &&
-                (ltUtf8(e.getKey._1, best._1._1) ||
-                  (e.getKey._1 == best._1._1 && ltUtf8(e.getKey._2, best._1._2)))))
+                (byStr.lt(e.getKey._1, best._1._1) ||
+                  (e.getKey._1 == best._1._1 && byStr.lt(e.getKey._2, best._1._2)))))
             best = (e.getKey, e.getValue.longValue())
         }
         if (best == null || best._2 < 2) done = true

@@ -333,9 +333,9 @@ class DedupSpec extends AnyFunSuite {
     def run(): Map[Long, Long] =
       Dedup.clusterPairs(pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val driverRoute = run() // default threshold: small graph, union-find
-    spark.conf.set("spark.graft.clusterPairsLocalMaxEdges", "0")
+    spark.conf.set("spark.graft.localRouteMaxRows", "0")
     val distributed = try run()
-      finally spark.conf.unset("spark.graft.clusterPairsLocalMaxEdges")
+      finally spark.conf.unset("spark.graft.localRouteMaxRows")
     assert(driverRoute === distributed)
     // sanity: labels are component minima (canonical member of own cluster)
     val byCluster = driverRoute.toSeq.groupBy(_._2)

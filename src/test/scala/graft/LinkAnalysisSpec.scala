@@ -89,7 +89,7 @@ class LinkAnalysisSpec extends AnyFunSuite {
   }
 
   test("pageRank: driver-local route equals the distributed rounds") {
-    // the under-bound local route (spark.graft.pageRankLocalMaxEdges) must
+    // the under-bound local route (spark.graft.localRouteMaxRows) must
     // be output-identical to the distributed rounds up to double reduction
     // order (both routes are pinned to the scalar model at 1e-9 above; the
     // catalog row additionally rounds at 8dp). Non-trivial graph: hubs,
@@ -97,7 +97,7 @@ class LinkAnalysisSpec extends AnyFunSuite {
     val edges = Seq(1L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 3L,
       4L -> 3L, 5L -> 5L, 6L -> 1L, 2L -> 6L)
     val local = prMap(edges, iters = 8)
-    val key = "spark.graft.pageRankLocalMaxEdges"
+    val key = "spark.graft.localRouteMaxRows"
     spark.conf.set(key, "0") // disables the local route
     val dist =
       try prMap(edges, iters = 8)

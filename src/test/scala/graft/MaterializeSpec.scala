@@ -26,11 +26,11 @@ class MaterializeSpec extends AnyFunSuite {
     // these specs exercise the ITERATIVE (distributed) clusterPairs route;
     // without this the small test graphs take the driver union-find
     // shortcut and the per-round barrier machinery under test never runs
-    spark.conf.set("spark.graft.clusterPairsLocalMaxEdges", "0")
+    spark.conf.set("spark.graft.localRouteMaxRows", "0")
     ckDir.foreach(spark.conf.set("spark.graft.checkpointDir", _))
     try f finally {
       spark.conf.unset("spark.graft.materialize")
-      spark.conf.unset("spark.graft.clusterPairsLocalMaxEdges")
+      spark.conf.unset("spark.graft.localRouteMaxRows")
       spark.conf.unset("spark.graft.checkpointDir")
       spark.catalog.clearCache()
     }

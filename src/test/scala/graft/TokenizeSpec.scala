@@ -55,9 +55,9 @@ class TokenizeSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
     val driver = run() // default threshold: small vocab, driver rounds
-    spark.conf.set("spark.graft.bpeLocalMaxVocab", "0")
+    spark.conf.set("spark.graft.localRouteMaxRows", "0")
     val distributed = try run()
-      finally spark.conf.unset("spark.graft.bpeLocalMaxVocab")
+      finally spark.conf.unset("spark.graft.localRouteMaxRows")
     assert(driver === distributed)
     assert(driver.nonEmpty)
   }
