@@ -10,8 +10,10 @@ import graft.model
  * The reference's logical query (SURVEY.md §0) as a composable set of
  * DataFrame transforms. Works identically on batch and streaming inputs —
  * the reference's own test proves the plan is batch-replayable
- * (`StructuredBotDetectionTest.scala:15-17`), and we keep that property: the
- * streaming package wraps these same functions around `readStream`.
+ * (`StructuredBotDetectionTest.scala:15-17`), and we keep that property as
+ * the replay oracle: the streaming package's pane operator
+ * (`StreamingBotDetection.verdictStream`) writes the rows that these
+ * transforms give under a watermark, trigger by trigger (`PaneVerdictSpec`).
  *
  * Scale notes (100 TB design rules):
  *   - every step is built-in expressions → whole-stage codegen + predicate

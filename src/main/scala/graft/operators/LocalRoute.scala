@@ -25,21 +25,44 @@ object LocalRoute {
     math.max(0L, math.min(Int.MaxValue - 1L,
       spark.conf.getOption(MaxRowsConf).map(_.toLong).getOrElse(1L << 20))).toInt
 
-  /** The bounded probe: all of `df` when it has at most min(`cap`,
-   * [[maxRows]]) rows and no null in `keyCols`, else None. One
-   * `limit(bound + 1).collect()` both decides and fetches: a count-first
-   * probe would cost every under-bound caller a second pass over `df`, and
-   * an over-bound input costs at most bound + 1 driver rows. Null keys take
-   * the distributed route, whose join semantics define what a null key
-   * does. */
+  /** The bounded probe: all of `df`, in partition order, when it has at
+   * most min(`cap`, [[maxRows]]) rows and no null in `keyCols`, else None.
+   * One job both decides and fetches: every partition counts up to
+   * bound + 1 rows and ships them when they fit its even share of the bound,
+   * so the job moves at most bound + 1 rows however the input is spread and
+   * however far over the bound it is. A partition over its share (skew
+   * within the bound) is fetched again in a second job. Spark's
+   * `limit(n).collect()` instead scans 1, then 4, then more partitions, one
+   * job each. Null keys take the distributed route, whose join semantics
+   * define what a null key does. */
   def collect(df: DataFrame, keyCols: Seq[String],
       cap: Long = Long.MaxValue): Option[Array[Row]] = {
     val max = math.min(cap, maxRows(df.sparkSession).toLong).toInt
     if (max <= 0) return None
-    val keys = keyCols.map(df.schema.fieldIndex)
-    val rows = df.limit(max + 1).collect()
-    if (rows.length > max || rows.exists(r => keys.exists(r.isNullAt))) None
-    else Some(rows)
+    val keys = keyCols.map(df.schema.fieldIndex).toArray
+    val rdd = df.rdd
+    val sc = df.sparkSession.sparkContext
+    val share = math.max(1L, (max + 1L) / math.max(1, rdd.getNumPartitions))
+    // per partition: rows seen (stops past the bound or at a null key),
+    // whether a key was null, and the rows when they fit the share
+    val probes = sc.runJob(rdd, (it: Iterator[Row]) => {
+      var n = 0L
+      var nullKey = false
+      val rows = Array.newBuilder[Row]
+      while (it.hasNext && n <= max && !nullKey) {
+        val r = it.next()
+        n += 1
+        nullKey = keys.exists(r.isNullAt)
+        if (n <= share) rows += r
+      }
+      (n, nullKey, if (n <= share) rows.result() else Array.empty[Row])
+    })
+    if (probes.exists(_._2) || probes.map(_._1).sum > max) return None
+    val skewed = probes.indices.filter(i => probes(i)._1 > share)
+    val refetched =
+      if (skewed.isEmpty) Map.empty[Int, Array[Row]]
+      else skewed.zip(sc.runJob(rdd, (it: Iterator[Row]) => it.toArray, skewed)).toMap
+    Some(probes.indices.toArray.flatMap(i => refetched.getOrElse(i, probes(i)._3)))
   }
 
   /** Spark's ASC NULLS FIRST order for the id types a driver-local route

@@ -992,10 +992,12 @@ object Similarity {
    * loop: cosine via the same double-accumulation order as the codegen'd
    * [[graft.functions.MaxCosineSim]] (dot over min-length, denom =
    * rowNorm × seedNorm, 0-denom → NaN, any-NaN poisons the max), winner =
-   * min (nearest_sim, id) under Spark's total double order
-   * (`java.lang.Double.compare`: NaN greatest, -0.0 < 0.0). The running max
-   * across rounds equals the per-round max over all seeds because double
-   * max is exact. */
+   * min (nearest_sim, id, vec) under Spark's total double order
+   * (`java.lang.Double.compare`: NaN greatest, -0.0 < 0.0) and Spark's
+   * array<float> order. A chosen id excludes every row with that id, as the
+   * distributed `isin` filter does, so a duplicated id is seeded once. The
+   * running max across rounds equals the per-round max over all seeds
+   * because double max is exact. */
   private def farthestFirstLocal(cands: Array[(Any, Array[Float])], nCells: Int,
       ord: Ordering[Any]): Seq[(Any, Array[Float])] = {
     val n = cands.length
@@ -1004,15 +1006,23 @@ object Similarity {
       while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
       math.sqrt(s)
     }
+    def lt(a: Int, b: Int): Boolean = {
+      val c = ord.compare(cands(a)._1, cands(b)._1)
+      c < 0 || (c == 0 && compareVecs(cands(a)._2, cands(b)._2) < 0)
+    }
+    val isChosen = new Array[Boolean](n)
+    def choose(w: Int): Unit = {
+      var j = 0
+      while (j < n) { if (ord.equiv(cands(j)._1, cands(w)._1)) isChosen(j) = true; j += 1 }
+    }
     var first = 0
     var i = 1
-    while (i < n) { if (ord.lt(cands(i)._1, cands(first)._1)) first = i; i += 1 }
+    while (i < n) { if (lt(i, first)) first = i; i += 1 }
     val chosen = scala.collection.mutable.ArrayBuffer(first)
-    val isChosen = new Array[Boolean](n)
-    isChosen(first) = true
+    choose(first)
     val best = Array.fill(n)(Double.NegativeInfinity)
     var last = first
-    while (chosen.length < math.min(nCells, n)) {
+    while (chosen.length < nCells && isChosen.contains(false)) {
       val (_, sv) = cands(last)
       val sn = norms(last)
       var j = 0
@@ -1038,16 +1048,28 @@ object Similarity {
           if (w < 0) w = k
           else {
             val c = java.lang.Double.compare(best(k), best(w))
-            if (c < 0 || (c == 0 && ord.lt(cands(k)._1, cands(w)._1))) w = k
+            if (c < 0 || (c == 0 && lt(k, w))) w = k
           }
         }
         k += 1
       }
       chosen += w
-      isChosen(w) = true
+      choose(w)
       last = w
     }
     chosen.toSeq.map(cands)
+  }
+
+  /** Spark's ascending array<float> order: element by element under
+   * `SQLOrderingUtil.compareFloats`, then the shorter array first. */
+  private def compareVecs(a: Array[Float], b: Array[Float]): Int = {
+    var i = 0
+    while (i < math.min(a.length, b.length)) {
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareFloats(a(i), b(i))
+      if (c != 0) return c
+      i += 1
+    }
+    Integer.compare(a.length, b.length)
   }
 
   /** The k distributed Gonzalez rounds (the fallback when the sample
@@ -1063,7 +1085,8 @@ object Similarity {
     // codegen cliff at large nCells) and reduces to one winner with a
     // single min_by — no per-round sample join/shuffle/cache churn.
     val first0 = sample
-      .select(min_by(struct(col("cand_id"), col("cand_vec")), col("cand_id")).as("s"))
+      .select(min_by(struct(col("cand_id"), col("cand_vec")),
+        struct(col("cand_id"), col("cand_vec"))).as("s"))
       .select(col("s.cand_id"), col("s.cand_vec")).head()
     val seeds = scala.collection.mutable.ArrayBuffer[(Any, Array[Float])](
       (first0.get(0), first0.getSeq[Float](1).toArray))
@@ -1076,15 +1099,16 @@ object Similarity {
           while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
           math.sqrt(s)
         }
-        // farthest point among candidates NOT already chosen: minimize
-        // (similarity to nearest seed, id). The exclusion stops a
-        // smaller-than-nCells sample from re-electing the same candidate.
+        // farthest point among candidates whose id is NOT already chosen:
+        // minimize (similarity to nearest seed, id, vec). The exclusion
+        // stops a smaller-than-nCells sample from re-electing the same
+        // candidate, and seeds a duplicated id once.
         val next = sample
           .filter(!col("cand_id").isin(seeds.toSeq.map(_._1): _*))
           .withColumn("nearest_sim", graft.functions.VectorExpressions
             .maxCosineSim(col("cand_vec"), seedMat, seedNorms))
           .select(min_by(struct(col("cand_id"), col("cand_vec")),
-            struct(col("nearest_sim"), col("cand_id"))).as("s"))
+            struct(col("nearest_sim"), col("cand_id"), col("cand_vec"))).as("s"))
           .select(col("s.cand_id"), col("s.cand_vec"))
           .filter(col("cand_id").isNotNull) // empty candidate set → 1 null row
           .collect()

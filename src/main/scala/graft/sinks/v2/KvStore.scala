@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -93,6 +94,12 @@ object KvStore {
 
   private[v2] def hadoopConf(): Configuration =
     SparkSession.active.sessionState.newHadoopConf()
+
+  /** The conf as one broadcast per scan or write, as Spark's file sources
+   * ship it: a `SerializableConfiguration` inside the reader or writer
+   * factory is deserialized again by every task. */
+  private[v2] def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
 
   private[v2] def supportedType(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | BooleanType | StringType => true
@@ -1671,7 +1678,7 @@ class KvScan(path: String, conf: Configuration, atEpoch: Option[Long] = None,
       }.toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      new KvReaderFactory(readSchema(), new SerializableConfiguration(conf),
+      new KvReaderFactory(readSchema(), KvStore.broadcastConf(conf),
         storedSchema, effectiveFilters)
   }
 
@@ -1759,9 +1766,11 @@ class KvMicroBatchStream(path: String, conf: Configuration, out: StructType,
       .toArray
   }
 
+  // one conf broadcast for the changefeed's lifetime
+  private lazy val bcConf = KvStore.broadcastConf(conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(out, new SerializableConfiguration(conf),
-      storedSchema, filters)
+    new KvReaderFactory(out, bcConf, storedSchema, filters)
 }
 
 /** one segment file to read; `dvFile` = full path of the segment's current
@@ -1775,7 +1784,7 @@ case class KvSegmentPartition(file: String, epoch: Long,
  * Pushed filters are evaluated row-exactly HERE, against the parsed JSON
  * node (filter columns need not be in the projection — with no residual
  * Filter in the plan, Spark only requests the output columns). */
-class KvReaderFactory(out: StructType, conf: SerializableConfiguration,
+class KvReaderFactory(out: StructType, conf: Broadcast[SerializableConfiguration],
     storedSchema: StructType,
     filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
     extends PartitionReaderFactory {
@@ -1787,14 +1796,14 @@ class KvReaderFactory(out: StructType, conf: SerializableConfiguration,
       // the _seg metadata column (row-address half of the SQL rowId)
       private val segName = UTF8String.fromString(path.getName)
       private val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-        path.getFileSystem(conf.value).open(path), "UTF-8"))
+        path.getFileSystem(conf.value.value).open(path), "UTF-8"))
       private val mapper = new ObjectMapper
       private val compiled = KvFilters.compile(storedSchema, filters)
       // merge-on-read: the segment's deletion vector as sorted ordinals.
       // Lines stream in ordinal order, so one monotone pointer suffices —
       // O(1) per row, and a deleted line skips even the JSON parse.
       private val deleted: Array[Long] = p.dvFile
-        .map(f => KvDv.readFile(path.getFileSystem(conf.value), new Path(f)))
+        .map(f => KvDv.readFile(path.getFileSystem(conf.value.value), new Path(f)))
         .getOrElse(Array.emptyLongArray)
       private var dvPtr = 0
       private var ordinal = -1L
@@ -1923,7 +1932,8 @@ class KvWriteBuilder(path: String, schema: StructType, queryId: String,
   override def truncate(): WriteBuilder = { overwrite = true; this }
 
   override def build(): Write = new Write {
-    private val serConf = new SerializableConfiguration(conf)
+    // one conf broadcast per write (a streaming query builds one write)
+    private lazy val serConf = KvStore.broadcastConf(conf)
     override def description(): String =
       s"graft-kv path=$path" + (if (overwrite) " (overwrite)" else "")
 
@@ -1969,16 +1979,16 @@ case class KvCommitMessage(stagedFile: String, rows: Long,
     statsJson: Option[String] = None,
     bloomFile: Option[String] = None) extends WriterCommitMessage
 
-class KvWriterFactory(path: String, schema: StructType, conf: SerializableConfiguration)
-    extends DataWriterFactory {
+class KvWriterFactory(path: String, schema: StructType,
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(path, schema, conf.value, s"$partitionId-$taskId")
+    new KvDataWriter(path, schema, conf.value.value, s"$partitionId-$taskId")
 }
 
 class KvStreamingWriterFactory(path: String, schema: StructType,
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(path, schema, conf.value, s"$epochId-$partitionId-$taskId")
+    new KvDataWriter(path, schema, conf.value.value, s"$epochId-$partitionId-$taskId")
 }
 
 /** Serializes its partition to one staged JSON-lines file; `commit` hands

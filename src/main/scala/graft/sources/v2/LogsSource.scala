@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -289,9 +290,13 @@ class LogsScan(readSchema0: StructType, filters: Array[Filter],
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 
+  // the conf travels as one broadcast per scan (a streaming query keeps its
+  // factory for its lifetime), not inside every task binary: each task
+  // would otherwise deserialize the whole Hadoop Configuration
   private def readerFactory: LogsPartitionReaderFactory =
     new LogsPartitionReaderFactory(readSchema0, filters,
-      new SerializableConfiguration(hadoopConf), limit, countStar)
+      SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
+      limit, countStar)
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
@@ -328,11 +333,11 @@ object LogsInputPartition {
 }
 
 class LogsPartitionReaderFactory(readSchema: StructType, filters: Array[Filter],
-    conf: SerializableConfiguration, limit: Option[Int] = None,
+    conf: Broadcast[SerializableConfiguration], limit: Option[Int] = None,
     countStar: Boolean = false) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new LogsPartitionReader(partition.asInstanceOf[LogsInputPartition],
-      readSchema, filters, conf.value, limit, countStar)
+      readSchema, filters, conf.value.value, limit, countStar)
 
   /** Vectorized path: plain scans hand Spark `ColumnarBatch`es (4096 rows)
    * instead of one InternalRow per `next()` — the downstream stage reads
@@ -344,7 +349,7 @@ class LogsPartitionReaderFactory(readSchema: StructType, filters: Array[Filter],
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
     import org.apache.spark.sql.vectorized.ColumnarBatch
     val rows = new LogsPartitionReader(partition.asInstanceOf[LogsInputPartition],
-      readSchema, filters, conf.value, limit, countStar)
+      readSchema, filters, conf.value.value, limit, countStar)
     new PartitionReader[ColumnarBatch] {
       private val capacity = 4096
       private val vectors = OnHeapColumnVector.allocateColumns(capacity, readSchema)

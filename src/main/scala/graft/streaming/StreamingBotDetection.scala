@@ -1,17 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-import graft.functions.BotConfig
-import graft.operators.BotDetection
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.IntervalUtils
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{BotClassifier, BotConfig}
 import graft.operators.BotDetection.Windowing
 
 /**
- * Structured-streaming assembly of the bot-detection query (SURVEY.md §3 E1):
- * the SAME transform functions as the batch path wrapped around a streaming
- * source — batch-replayability is a design invariant (the reference's own
- * test runs the streaming plan as batch, `StructuredBotDetectionTest.scala:15-17`).
+ * Structured-streaming assembly of the bot-detection query (SURVEY.md §3 E1).
+ * The stream gives the same verdict rows as Spark's update-mode sliding
+ * window aggregation over the batch transforms of
+ * [[graft.operators.BotDetection]] (`slidingAggregate` → `classify` →
+ * `filterBotsStreaming` under a 2 min watermark): same columns, same rows
+ * in the same triggers. `PaneVerdictSpec` proves it batch by batch against
+ * that plan; the batch path stays the replay oracle.
  *
  * Reference constants preserved: watermark 2 min (`ImplStructured.scala:11`),
  * window 10 min / slide 40 s (`:12-13`), update output mode + 40 s trigger
@@ -21,8 +29,60 @@ object StreamingBotDetection {
 
   val watermark: String = "2 minutes"
 
+  /** Input value of the pane operator: one event, its pane start in µs. */
+  final case class PaneEvent(pane_us: Long, clicks: Long, views: Long, category: String)
+
+  /** Per-ip state: the live panes (starts ascending, µs) with their click
+   * and view sums and distinct non-null categories. */
+  final case class PaneState(starts: Array[Long], clicks: Array[Long], views: Array[Long],
+      categories: Array[Array[String]])
+
+  /** One output row, named as the verdict columns. */
+  final case class WindowVerdict(ip: String, window_start_s: Long, clicks: Long,
+      views: Long, n_categories: Long, reason: String)
+
+  // resolved encoders, built once: deriving them per plan (implicits, or
+  // `Encoders.product`, which Spark converts again on every use) costs
+  // tens of ms of every query set-up
+  private val keyEnc = ExpressionEncoder[String]()
+  private val eventEnc = ExpressionEncoder[PaneEvent]()
+  private val stateEnc = ExpressionEncoder[PaneState]()
+  private val verdictEnc = ExpressionEncoder[WindowVerdict]()
+
+  /** Length of a day-time interval string ("10 minutes") in µs. */
+  private def micros(interval: String): Long = {
+    val i = IntervalUtils.stringToInterval(UTF8String.fromString(interval))
+    require(i.months == 0, s"interval must not use months or years: $interval")
+    Math.addExact(i.microseconds, Math.multiplyExact(i.days.toLong, 86400L * 1000000L))
+  }
+
   /**
-   * Streaming verdict plan over normalized LogRecords.
+   * Streaming verdict plan over normalized LogRecords (`ip`, `time`,
+   * non-null `clicks` and `views`, `category`): one `flatMapGroupsWithState`
+   * keyed by ip whose state holds pane partials — "No Pane, No Gain"
+   * (Li et al., SIGMOD Record 2005). Each event is folded once into its pane
+   * of width gcd(duration, slide); each window is the sum of the panes it
+   * covers. Spark's `window()` instead copies every event into
+   * duration / slide (ip, window) rows and keeps one state row per window.
+   *
+   * Watermark: on `time + duration` with delay `duration + 2 min`, the same
+   * numeric watermark as `time` with 2 min. Under `EventTimeTimeout` Spark
+   * drops every input row whose watermark column is at or behind the
+   * watermark before the function sees it; on `time` that would lose a late
+   * row that still falls into an open window. On `time + duration` a row is
+   * dropped only when all of its windows have closed.
+   *
+   * Per trigger and ip the function folds the new rows into their panes,
+   * emits every window on the slide grid that holds a touched pane and ends
+   * after the watermark (classified, bots only), prunes the panes no open
+   * window covers and times the key out when its newest pane closes.
+   *
+   * One difference is left: Spark's aggregation filters late rows with the
+   * watermark of the previous trigger, the function sees the current one.
+   * When two data triggers run back to back (no no-data trigger between
+   * them) and the watermark moved, a row that reaches a window ending
+   * between the two watermarks updates it in Spark's plan and not here.
+   * Such a row is more than the 2 min delay behind the events already seen.
    *
    * Streaming-vs-batch delta (SURVEY.md §7d): the reference's unbounded
    * `dropDuplicates()` (P7) is illegal in a stream (unbounded state); update
@@ -30,11 +90,89 @@ object StreamingBotDetection {
    * upserts idempotently (`Sinks.readVerdicts` keeps the first write per
    * key) — the Cassandra-ifNotExists parity the reference relied on.
    */
-  def verdictStream(records: DataFrame, w: Windowing, cfg: BotConfig): DataFrame =
-    BotDetection.filterBotsStreaming(
-      BotDetection.classify(
-        BotDetection.slidingAggregate(records.withWatermark("time", watermark), w),
-        cfg))
+  def verdictStream(records: DataFrame, w: Windowing, cfg: BotConfig): DataFrame = {
+    require(records.isStreaming, "verdictStream needs a streaming input; " +
+      "batch inputs use BotDetection.transformAndFilterBots")
+    val durUs = micros(w.duration)
+    val slideUs = micros(w.slide)
+    require(slideUs > 0 && slideUs <= durUs,
+      s"slide must be positive and at most the window duration: $w")
+    val paneUs = BigInt(durUs).gcd(BigInt(slideUs)).toLong
+    val t = unix_micros(col("time"))
+    records
+      .select(col("ip"), (t - pmod(t, lit(paneUs))).as("pane_us"),
+        col("clicks"), col("views"), col("category"),
+        timestamp_micros(t + durUs).as("window_close"))
+      .withWatermark("window_close", s"${durUs + micros(watermark)} microseconds")
+      .groupBy(col("ip"))
+      .as(keyEnc, eventEnc)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.EventTimeTimeout())(
+        new PaneFold(durUs, slideUs, cfg).apply _)(stateEnc, verdictEnc)
+      .toDF()
+  }
+
+  /** The per-ip state transition of [[verdictStream]]; all times in µs. */
+  private final class PaneFold(durUs: Long, slideUs: Long, cfg: BotConfig)
+      extends Serializable {
+
+    private final class Partial(var clicks: Long, var views: Long,
+        val categories: mutable.HashSet[String])
+
+    def apply(ip: String, rows: Iterator[PaneEvent],
+        state: GroupState[PaneState]): Iterator[WindowVerdict] = {
+      if (state.hasTimedOut) {
+        state.remove()
+        return Iterator.empty
+      }
+      val panes = mutable.TreeMap.empty[Long, Partial]
+      state.getOption.foreach { s =>
+        s.starts.indices.foreach { i =>
+          panes(s.starts(i)) = new Partial(s.clicks(i), s.views(i),
+            mutable.HashSet.from(s.categories(i)))
+        }
+      }
+      val touched = mutable.HashSet.empty[Long]
+      rows.foreach { r =>
+        val p = panes.getOrElseUpdate(r.pane_us, new Partial(0L, 0L, mutable.HashSet.empty))
+        p.clicks += r.clicks
+        p.views += r.views
+        if (r.category != null) p.categories += r.category
+        touched += r.pane_us
+      }
+      val wmUs = state.getCurrentWatermarkMs() * 1000L
+      // open windows on the slide grid that cover a touched pane
+      val starts = mutable.TreeSet.empty[Long]
+      touched.foreach { p =>
+        var s = Math.floorDiv(p, slideUs) * slideUs
+        while (s > p - durUs && s + durUs > wmUs) { starts += s; s -= slideUs }
+      }
+      val out = starts.toSeq.flatMap { s =>
+        var clicks = 0L
+        var views = 0L
+        val categories = mutable.HashSet.empty[String]
+        panes.range(s, s + durUs).valuesIterator.foreach { p =>
+          clicks += p.clicks; views += p.views; categories ++= p.categories
+        }
+        val (isBot, reason) =
+          BotClassifier.classifyScalar(clicks, views, categories.size.toLong, cfg)
+        if (isBot) Some(WindowVerdict(ip, Math.floorDiv(s, 1000000L), clicks, views,
+          categories.size.toLong, reason))
+        else None
+      }
+      val live = panes.rangeFrom(wmUs - durUs + 1)
+      if (live.isEmpty) state.remove()
+      else {
+        state.update(PaneState(live.keysIterator.toArray,
+          live.valuesIterator.map(_.clicks).toArray,
+          live.valuesIterator.map(_.views).toArray,
+          live.valuesIterator.map(_.categories.toArray).toArray))
+        // every window over the newest pane has closed once the watermark
+        // passes its start + duration
+        state.setTimeoutTimestamp(Math.floorDiv(live.lastKey + durUs + 999L, 1000L))
+      }
+      out.iterator
+    }
+  }
 
   /**
    * Streaming-legal exact dedup (SURVEY.md §7d): `dropDuplicatesWithinWatermark`

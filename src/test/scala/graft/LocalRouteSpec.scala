@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,6 +52,29 @@ class LocalRouteSpec extends AnyFunSuite {
     val nullKey = Seq((Some(1L), 10L), (None, 20L)).toDF("k", "v")
     assert(LocalRoute.collect(nullKey, Seq("k")).isEmpty)
     assert(LocalRoute.collect(nullKey, Seq("v")).map(_.length) === Some(2))
+  }
+
+  test("collect probes a multi-partition input in one job") {
+    // RDD-backed frames: no static row count, so Spark cannot drop the
+    // probe's limit as it does over a range or a local relation
+    val sc = spark.sparkContext
+    val even = sc.parallelize(0L until 1000L, 8).toDF("k")
+    assert(even.rdd.getNumPartitions === 8)
+    var got: Option[Array[org.apache.spark.sql.Row]] = None
+    assert(jobsDuring { got = LocalRoute.collect(even, Seq("k")) } === 1)
+    assert(got.map(_.map(_.getLong(0)).toSeq) === Some(0L until 1000L))
+    // over the bound, or a null key: still one job, and no rows
+    assert(withBound("999")(jobsDuring { got = LocalRoute.collect(even, Seq("k")) }) === 1)
+    assert(got.isEmpty)
+    val withNull = even.select(when($"k" =!= 500L, $"k").as("k"))
+    assert(jobsDuring { got = LocalRoute.collect(withNull, Seq("k")) } === 1)
+    assert(got.isEmpty)
+    // one partition over its share of the bound is fetched again; partition
+    // order is kept
+    val skewed = sc.parallelize(0L until 1000L, 1).union(sc.parallelize(1000L until 1007L, 7)).toDF("k")
+    assert(skewed.rdd.getNumPartitions === 8)
+    assert(withBound("2000")(jobsDuring { got = LocalRoute.collect(skewed, Seq("k")) }) === 2)
+    assert(got.map(_.map(_.getLong(0)).toSeq) === Some(0L until 1007L))
   }
 
   test("a bound at Long.MaxValue keeps the local route (no overflow disables it)") {
@@ -128,6 +152,10 @@ class LocalRouteSpec extends AnyFunSuite {
     Edge("seedFarthestFirst", "duplicate and self-loop edges", 5,
       () => Similarity.seedFarthestFirst(vectors((x1, Seq(1f, 0f)), (x2, Seq(1f, 0f)),
         (x3, Seq(0f, 1f)), (x4, Seq(0f, 1f)), (x5, Seq(0f, 0f))), "vec_id", "embedding", 4)),
+    // one id on two vectors: both routes seed it once, the smaller vector
+    Edge("seedFarthestFirst", "duplicate ids", 4,
+      () => Similarity.seedFarthestFirst(vectors((x1, Seq(1f, 0f)), (x1, Seq(0f, 1f)),
+        (x2, Seq(-1f, 0f)), (x3, Seq(0.6f, 0.8f))), "vec_id", "embedding", 3)),
     Edge("seedFarthestFirst", "NaN vectors", 4,
       () => Similarity.seedFarthestFirst(vectors((x1, Seq(1f, 0f)), (x2, Seq(Float.NaN, 0f)),
         (x3, Seq(0f, 1f)), (x4, Seq(Float.NaN, Float.NaN))), "vec_id", "embedding", 3)),

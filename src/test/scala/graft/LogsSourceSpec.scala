@@ -439,7 +439,8 @@ class LogsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val stream = new LogsMicroBatchStream(sdir.toString, ".*", Map.empty,
         spark.sessionState.newHadoopConf(),
         new LogsPartitionReaderFactory(Ingest.wireSchema, Array.empty,
-          new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf())))
+          spark.sparkContext.broadcast(
+            new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))))
       var off = stream.initialOffset().asInstanceOf[LogsOffset]
       var fatAdmitted = false
       var i = 0

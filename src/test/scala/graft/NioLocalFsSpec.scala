@@ -43,6 +43,11 @@ class NioLocalFsSpec extends AnyFunSuite {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     val out = Files.createTempFile("graft_jfr_", ".jfr")
+    // a session cloned by an earlier streaming query in this JVM deletes its
+    // artifact directory when it is collected, and Spark deletes with a
+    // forked `rm -rf`: collect those before recording
+    System.gc()
+    Thread.sleep(1000L)
     try {
       rec.start()
       body
