@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.BotConfig
@@ -12,12 +13,13 @@ import graft.streaming.StreamingBotDetection
 
 /**
  * Streaming throughput benchmark: events/second sustained by the full
- * verdict pipeline (json file source → watermarked sliding-window agg →
- * classifier → foreachBatch sink) over generated clickstream traffic.
+ * verdict pipeline (json file source → watermarked sliding-window verdicts
+ * → foreachBatch sink) over generated clickstream traffic.
  *
  * The reference's design load is ~150 events/s (100 users/s + 100 bots at
  * 1/2 s — BASELINE.md); this prints the measured single-node ceiling as one
- * JSON line.
+ * JSON line. With the kv sink the line also says whether the store
+ * `"match"`es a batch replay of the wire, and a mismatch exits non-zero.
  */
 object StreamBench {
   private def num2(d: Double): String = Fmt.num("%.2f", d)
@@ -200,11 +202,13 @@ object StreamBench {
     val eps = evs.size / sec
     val store = if (rocksdb) "rocksdb" else "hdfs"
     val source = if (dsv2) "graft-logs" else "json-files"
+    // the kv chain checks its answer against a batch replay of the wire
+    val mismatches = if (kvSink) replayMismatches(spark, dir, kvPath) else 0L
     val sink = if (kvSink) "graft-kv+changefeed"
       else if (upsertSink) "graft-kv-upsert(cdc-apply)"
       else "foreachBatch"
     val feedStats = feedLag.fold("")(lag =>
-      s""","feed_lag_sec":${num2(lag)},"fed_rows":${fedRows.get()}""")
+      s""","feed_lag_sec":${num2(lag)},"fed_rows":${fedRows.get()},"match":${mismatches == 0}""")
     val spreadStats = stateSpread.fold("") { case (n, med, max) =>
       val ratio = if (med > 0) num2(max.toDouble / med) else "-1"
       s""","state_spread":{"parts":$n,"med_bytes":$med,"max_bytes":$max,"ratio":$ratio}"""
@@ -215,5 +219,32 @@ object StreamBench {
       require(fedRows.get() == graft.sinks.v2.KvStore.read(spark, kvPath).count(),
         s"changefeed drained ${fedRows.get()} rows but the store committed a different count")
     spark.stop()
+    if (mismatches > 0) sys.exit(1)
+  }
+
+  /**
+   * (ip, window) keys on which the kv store disagrees with a batch
+   * `BotDetection` replay of the wire files in `dir`; the store's verdict
+   * per key is its last emission, the largest (clicks, views, n_categories,
+   * reason), as counts only grow. Every replay bot window must equal it. A
+   * stored window the replay does not flag must be a `clicks/views` verdict
+   * whose clicks and views are each at most the replay's: only the ratio
+   * rule turns a bot window back into a non-bot as rows arrive.
+   */
+  private def replayMismatches(spark: SparkSession, dir: String, kvPath: String): Long = {
+    val counts = struct(col("clicks"), col("views"), col("n_categories"), col("reason"))
+    val replay = BotDetection.classify(BotDetection.slidingAggregate(
+        Ingest.toLogRecords(Ingest.jsonDirBatch(spark, dir)), BotDetection.referenceWindowing),
+        BotConfig())
+      .select(col("ip"), col("window_start_s"), counts.as("r"), col("is_bot"))
+    val last = graft.sinks.v2.KvStore.read(spark, kvPath)
+      .groupBy("ip", "window_start_s").agg(max(counts).as("s"))
+    val ratioOnly = col("s.reason") === "clicks/views" &&
+      col("s.clicks") <= col("r.clicks") && col("s.views") <= col("r.views")
+    val bad = last.join(replay, Seq("ip", "window_start_s"), "full_outer").filter(
+      when(coalesce(col("is_bot"), lit(false)), !coalesce(col("s") === col("r"), lit(false)))
+        .otherwise(col("s").isNotNull && !coalesce(ratioOnly, lit(false))))
+    bad.limit(5).collect().foreach(r => System.err.println(s"replay mismatch: $r"))
+    bad.count()
   }
 }

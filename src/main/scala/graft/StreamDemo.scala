@@ -133,15 +133,14 @@ object StreamDemo {
     // E2 parity (the reference's DStream path, SURVEY.md §3 E2): keyed
     // track-list state over the same wire frame, emitting (bot_ip, reason)
     // like the Cassandra `bots` table — driven here by the deterministic
-    // rate source instead of files. Runs the transformWithState processor
-    // (spec-pinned row-equal to the flatMapGroupsWithState port) on the
-    // RocksDB store — the streaming-native scale path.
+    // rate source instead of files. Runs on the RocksDB store — the
+    // streaming-native scale path.
     import spark.implicits._
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val out2 = Files.createTempDirectory("graft-demo-out2").toString + "/bots"
     val ckpt2 = Files.createTempDirectory("graft-demo-ckpt2").toString
-    val trackVerdicts = graft.streaming.TrackListProcessor.botVerdicts(
+    val trackVerdicts = graft.streaming.TrackListState.botVerdicts(
         Ingest.syntheticRateStream(spark, rowsPerBatch = 5000, userCategories = 4)
           .as[graft.model.LogRecord],
         BotConfig(requestLimit = 500, categoryLimit = 5, clicksToViewsLimit = 5))

@@ -9,8 +9,8 @@ import graft.model.LogRecord
 
 /**
  * Late/duplicate arrival × executor-kill chaos for the VERDICT pipeline
- * itself (r17 verdict task 3): [[graft.streaming.TrackListProcessor]]
- * (transformWithState on RocksDB — the scale path) fed the reversed/
+ * itself (r17 verdict task 3): [[graft.streaming.TrackListState]]
+ * (pane state on the RocksDB store — the scale path) fed the reversed/
  * duplicated corpus, verdicts landing in the exactly-once graft-kv sink,
  * while `tools/chaos.sh verdict` SIGKILLs executors. `LateChaos` crossed
  * this adversary pair for the incremental/CDC views; this main crosses it
@@ -28,13 +28,13 @@ import graft.model.LogRecord
  *     surface under test is state merge + eviction + sink exactly-once
  *     under adversarial arrival and churn) and no idle timer can fire;
  *   - reversed delivery makes the track-list eviction BATCH-SPLIT-PROOF:
- *     each ip's newest bucket arrives first, so the horizon is pinned at
- *     (global max bucket − trackS) from that ip's first update on, and
- *     the final kept set = {fed buckets above the horizon} with totals
+ *     each ip's newest pane arrives first, so the horizon is pinned at
+ *     (global max pane − trackS) from that ip's first update on, and
+ *     the final kept set = {fed panes above the horizon} with totals
  *     summed over the fed multiset (duplicates included — at-least-once
  *     upstream is the contract, same as LateChaos's ivm view);
  *   - the expected verdict per ip is therefore closed-form on the driver:
- *     bucket → horizon filter → IpStat totals → classifyScalar. The
+ *     pane → horizon filter → totals → classifyScalar. The
  *     LATEST kv row per ip (max `_epoch`) must equal it for every ip.
  *
  * MemoryStream keeps the source on the driver — kills hit the stateful
@@ -111,9 +111,9 @@ object VerdictChaos {
     }
     def dup(b: Int): Boolean = b % 3 == 2
 
-    // ---- pipeline: MemoryStream → transformWithState → graft-kv ----
+    // ---- pipeline: MemoryStream → track-list panes → graft-kv ----
     val input = MemoryStream[LogRecord](spark)
-    val verdicts = graft.streaming.TrackListProcessor.verdicts(
+    val verdicts = graft.streaming.TrackListState.verdicts(
       input.toDS(), BotConfig(), slideS, trackS,
       watermarkDelay = s"${spanS * 2} seconds") // beyond the span: no drops
     val q = graft.sinks.Sinks.verdictSink(verdicts.toDF(), Map(

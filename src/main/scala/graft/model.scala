@@ -50,8 +50,7 @@ object model {
   /**
    * Per-IP aggregate — a commutative monoid (reference `Common.scala:52-61`):
    * `+` adds the counts and unions the category sets; identity = `empty`.
-   * Used as the buffer of the typed single-pass aggregator and as the state
-   * element of the DStream-parity track-list state (streaming package).
+   * Used as the buffer of the typed single-pass aggregator.
    */
   final case class IpStat(clicks: Long, views: Long, categories: Set[String]) {
     def +(other: IpStat): IpStat =

@@ -11,6 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{BotClassifier, BotConfig}
 import graft.operators.BotDetection.Windowing
+import graft.streaming.Panes.{PaneEvent, PaneState}
 
 /**
  * Structured-streaming assembly of the bot-detection query (SURVEY.md §3 E1).
@@ -29,24 +30,11 @@ object StreamingBotDetection {
 
   val watermark: String = "2 minutes"
 
-  /** Input value of the pane operator: one event, its pane start in µs. */
-  final case class PaneEvent(pane_us: Long, clicks: Long, views: Long, category: String)
-
-  /** Per-ip state: the live panes (starts ascending, µs) with their click
-   * and view sums and distinct non-null categories. */
-  final case class PaneState(starts: Array[Long], clicks: Array[Long], views: Array[Long],
-      categories: Array[Array[String]])
-
   /** One output row, named as the verdict columns. */
   final case class WindowVerdict(ip: String, window_start_s: Long, clicks: Long,
       views: Long, n_categories: Long, reason: String)
 
-  // resolved encoders, built once: deriving them per plan (implicits, or
-  // `Encoders.product`, which Spark converts again on every use) costs
-  // tens of ms of every query set-up
-  private val keyEnc = ExpressionEncoder[String]()
-  private val eventEnc = ExpressionEncoder[PaneEvent]()
-  private val stateEnc = ExpressionEncoder[PaneState]()
+  // resolved once, like the pane encoders (see Panes)
   private val verdictEnc = ExpressionEncoder[WindowVerdict]()
 
   /** Length of a day-time interval string ("10 minutes") in µs. */
@@ -98,16 +86,11 @@ object StreamingBotDetection {
     require(slideUs > 0 && slideUs <= durUs,
       s"slide must be positive and at most the window duration: $w")
     val paneUs = BigInt(durUs).gcd(BigInt(slideUs)).toLong
-    val t = unix_micros(col("time"))
-    records
-      .select(col("ip"), (t - pmod(t, lit(paneUs))).as("pane_us"),
-        col("clicks"), col("views"), col("category"),
-        timestamp_micros(t + durUs).as("window_close"))
-      .withWatermark("window_close", s"${durUs + micros(watermark)} microseconds")
-      .groupBy(col("ip"))
-      .as(keyEnc, eventEnc)
+    val windowClose = timestamp_micros(unix_micros(col("time")) + durUs).as("window_close")
+    Panes.byIp(records.select(Panes.columns(paneUs) :+ windowClose: _*)
+        .withWatermark("window_close", s"${durUs + micros(watermark)} microseconds"))
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.EventTimeTimeout())(
-        new PaneFold(durUs, slideUs, cfg).apply _)(stateEnc, verdictEnc)
+        new PaneFold(durUs, slideUs, cfg).apply _)(Panes.stateEnc, verdictEnc)
       .toDF()
   }
 
@@ -115,30 +98,14 @@ object StreamingBotDetection {
   private final class PaneFold(durUs: Long, slideUs: Long, cfg: BotConfig)
       extends Serializable {
 
-    private final class Partial(var clicks: Long, var views: Long,
-        val categories: mutable.HashSet[String])
-
     def apply(ip: String, rows: Iterator[PaneEvent],
         state: GroupState[PaneState]): Iterator[WindowVerdict] = {
       if (state.hasTimedOut) {
         state.remove()
         return Iterator.empty
       }
-      val panes = mutable.TreeMap.empty[Long, Partial]
-      state.getOption.foreach { s =>
-        s.starts.indices.foreach { i =>
-          panes(s.starts(i)) = new Partial(s.clicks(i), s.views(i),
-            mutable.HashSet.from(s.categories(i)))
-        }
-      }
-      val touched = mutable.HashSet.empty[Long]
-      rows.foreach { r =>
-        val p = panes.getOrElseUpdate(r.pane_us, new Partial(0L, 0L, mutable.HashSet.empty))
-        p.clicks += r.clicks
-        p.views += r.views
-        if (r.category != null) p.categories += r.category
-        touched += r.pane_us
-      }
+      val panes = Panes.load(state)
+      val touched = Panes.fold(panes, rows)
       val wmUs = state.getCurrentWatermarkMs() * 1000L
       // open windows on the slide grid that cover a touched pane
       val starts = mutable.TreeSet.empty[Long]
@@ -147,29 +114,19 @@ object StreamingBotDetection {
         while (s > p - durUs && s + durUs > wmUs) { starts += s; s -= slideUs }
       }
       val out = starts.toSeq.flatMap { s =>
-        var clicks = 0L
-        var views = 0L
-        val categories = mutable.HashSet.empty[String]
-        panes.range(s, s + durUs).valuesIterator.foreach { p =>
-          clicks += p.clicks; views += p.views; categories ++= p.categories
-        }
-        val (isBot, reason) =
-          BotClassifier.classifyScalar(clicks, views, categories.size.toLong, cfg)
-        if (isBot) Some(WindowVerdict(ip, Math.floorDiv(s, 1000000L), clicks, views,
-          categories.size.toLong, reason))
+        val w = Panes.sum(panes.range(s, s + durUs).valuesIterator)
+        val n = w.categories.size.toLong
+        val (isBot, reason) = BotClassifier.classifyScalar(w.clicks, w.views, n, cfg)
+        if (isBot) Some(WindowVerdict(ip, Math.floorDiv(s, 1000000L), w.clicks, w.views,
+          n, reason))
         else None
       }
       val live = panes.rangeFrom(wmUs - durUs + 1)
-      if (live.isEmpty) state.remove()
-      else {
-        state.update(PaneState(live.keysIterator.toArray,
-          live.valuesIterator.map(_.clicks).toArray,
-          live.valuesIterator.map(_.views).toArray,
-          live.valuesIterator.map(_.categories.toArray).toArray))
-        // every window over the newest pane has closed once the watermark
-        // passes its start + duration
+      Panes.store(state, live)
+      // every window over the newest pane has closed once the watermark
+      // passes its start + duration
+      if (live.nonEmpty)
         state.setTimeoutTimestamp(Math.floorDiv(live.lastKey + durUs + 999L, 1000L))
-      }
       out.iterator
     }
   }

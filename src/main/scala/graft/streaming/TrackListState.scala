@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{BotClassifier, BotConfig}
-import graft.model.{EvaluatedStat, IpStat, LogRecord}
+import graft.model.{EvaluatedStat, LogRecord}
+import graft.streaming.Panes.{PaneEvent, PaneState}
 
 
 /**
@@ -14,79 +15,60 @@ import graft.model.{EvaluatedStat, IpStat, LogRecord}
  * per-ip track list of windowed partial aggregates with a 10-minute horizon
  * and idle-key timeout, re-expressed on `flatMapGroupsWithState`.
  *
+ * The track list is the pane list of [[StreamingBotDetection.verdictStream]]
+ * with a trailing horizon: both operators keep [[Panes]] as their state.
+ *
  * Reference semantics implemented as INTENDED, not as written:
  *   - `reduceByKeyAndWindow` bucketing to the 30 s slide grid
- *     (`ImplDStreams.scala:80-84`) → we bucket event time to `slideS`;
+ *     (`ImplDStreams.scala:80-84`) → panes `slideS` wide;
  *   - `mapWithState` appends the latest partial and "filters out old
  *     results" (`ImplDStreams.scala:90-110`) — the reference's comparison is
  *     inverted and unit-mixed (keeps OLD entries, SURVEY.md §2c A5); we keep
  *     the last `trackS` seconds as intended;
  *   - 10-minute idle timeout (`StateSpec...timeout`, `ImplDStreams.scala:121`)
- *     → `GroupState.setTimeoutDuration` under processing-time timeout;
- *   - A6/A7: merge buckets per ip with the IpStat monoid, classify, emit
- *     `(ip, reason)` verdicts (`ImplDStreams.scala:123-125`).
+ *     → an event-time timeout at the newest pane + `trackS`;
+ *   - A6/A7: sum the panes per ip, classify, emit `(ip, reason)` verdicts
+ *     (`ImplDStreams.scala:123-125`).
  *
- * State per key is bounded: ≤ trackS/slideS entries, each a fixed-size
- * IpStat (category set capped by `maxCategories` — at 100 TB an unbounded
- * per-key set is forbidden; beyond the cap the count saturates, which cannot
- * flip verdicts because the category rule only tests `> limit`).
+ * State per key is bounded: ≤ trackS/slideS panes, each with at most
+ * [[Panes.maxCategories]] categories.
  */
 object TrackListState {
 
-  final case class TrackedStat(clicks: Long, views: Long, categories: Set[String], bucketS: Long)
+  // resolved once, like the pane encoders (see Panes)
+  private val verdictEnc = ExpressionEncoder[EvaluatedStat]()
 
-  /** Verdict row type — the model's [[EvaluatedStat]] (one verdict shape
-   * everywhere; `IpVerdict` kept as an alias for call sites). */
-  type IpVerdict = EvaluatedStat
-
-  def bucketOf(t: Timestamp, slideS: Long): Long =
-    Math.floorDiv(t.getTime / 1000L, slideS) * slideS
-
-  /** Pure state transition: merge new buckets into the track list, evict
-   * entries older than the horizon, classify the merged whole.
+  /** The per-ip state transition: fold the rows into their panes, drop the
+   * panes at or behind the horizon (newest pane − `trackS`), classify the
+   * sum of the rest; all times in µs.
    *
    * `eventTimeTimeout` is set on the streaming path only: idle keys expire
    * once the watermark passes their horizon. (ProcessingTimeTimeout is a
    * trap here — `FlatMapGroupsWithStateExec.shouldRunAnotherBatch` returns
    * true unconditionally under it, so the query runs empty micro-batches
    * back-to-back forever and `processAllAvailable` never returns.) */
-  def update(cfg: BotConfig, slideS: Long, trackS: Long, maxCategories: Int,
-      eventTimeTimeout: Boolean)(
-      ip: String, rows: Iterator[LogRecord],
-      state: GroupState[List[TrackedStat]]): Iterator[IpVerdict] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val incoming = rows.toSeq
-    if (incoming.isEmpty) return Iterator.empty
+  private final class TrackFold(trackUs: Long, cfg: BotConfig, eventTimeTimeout: Boolean)
+      extends Serializable {
 
-    val byBucket = incoming.groupBy(r => bucketOf(r.time, slideS)).map {
-      case (bucket, rs) =>
-        val merged = rs.map(IpStat.fromRecord).reduce(_ + _)
-        TrackedStat(merged.clicks, merged.views, merged.categories.take(maxCategories), bucket)
+    def apply(ip: String, rows: Iterator[PaneEvent],
+        state: GroupState[PaneState]): Iterator[EvaluatedStat] = {
+      if (state.hasTimedOut) {
+        state.remove()
+        return Iterator.empty
+      }
+      val panes = Panes.load(state)
+      Panes.fold(panes, rows)
+      val newest = panes.lastKey
+      val live = panes.rangeFrom(newest - trackUs + 1)
+      Panes.store(state, live)
+      if (eventTimeTimeout)
+        state.setTimeoutTimestamp(
+          math.max((newest + trackUs) / 1000L, state.getCurrentWatermarkMs() + 1))
+      val total = Panes.sum(live.valuesIterator)
+      val n = total.categories.size.toLong
+      val (isBot, reason) = BotClassifier.classifyScalar(total.clicks, total.views, n, cfg)
+      Iterator.single(EvaluatedStat(ip, total.clicks, total.views, n, isBot, reason))
     }
-    val prior = state.getOption.getOrElse(Nil)
-    val mergedList = (prior ++ byBucket)
-      .groupBy(_.bucketS).map { case (bucket, ts) =>
-        TrackedStat(
-          ts.map(_.clicks).sum, ts.map(_.views).sum,
-          ts.flatMap(_.categories).toSet.take(maxCategories), bucket)
-      }.toList
-    val horizon = mergedList.map(_.bucketS).max - trackS
-    val kept = mergedList.filter(_.bucketS > horizon).sortBy(_.bucketS)
-    state.update(kept)
-    if (eventTimeTimeout) {
-      // expire the key once the watermark passes its newest bucket + horizon
-      val deadline = (kept.map(_.bucketS).max + trackS) * 1000L
-      state.setTimeoutTimestamp(math.max(deadline, state.getCurrentWatermarkMs() + 1))
-    }
-
-    val total = kept.map(t => IpStat(t.clicks, t.views, t.categories)).reduce(_ + _)
-    val (isBot, reason) = BotClassifier.classifyScalar(
-      total.clicks, total.views, total.categories.size.toLong, cfg)
-    Iterator.single(EvaluatedStat(ip, total.clicks, total.views,
-      total.categories.size.toLong, isBot, reason))
   }
 
   /** Streaming (or batch — flatMapGroupsWithState is batch-runnable with
@@ -94,23 +76,16 @@ object TrackListState {
    * stream, one row per ip per micro-batch. */
   def verdicts(records: Dataset[LogRecord], cfg: BotConfig = BotConfig(),
       slideS: Long = 30L, trackS: Long = 600L,
-      maxCategories: Int = 10000,
-      watermarkDelay: String = "2 minutes"): Dataset[IpVerdict] = {
-    val spark = records.sparkSession
-    import spark.implicits._
-    if (records.isStreaming) {
-      records.withWatermark("time", watermarkDelay)
-        .groupByKey(_.ip)
-        .flatMapGroupsWithState(
-          OutputMode.Update(), GroupStateTimeout.EventTimeTimeout())(
-          update(cfg, slideS, trackS, maxCategories, eventTimeTimeout = true))
-    } else {
-      records
-        .groupByKey(_.ip)
-        .flatMapGroupsWithState(
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(
-          update(cfg, slideS, trackS, maxCategories, eventTimeTimeout = false))
-    }
+      watermarkDelay: String = "2 minutes"): Dataset[EvaluatedStat] = {
+    val events = records.select(Panes.columns(slideS * 1000000L) :+ col("time"): _*)
+    val (byIp, timeout) =
+      if (records.isStreaming)
+        (Panes.byIp(events.withWatermark("time", watermarkDelay)),
+          GroupStateTimeout.EventTimeTimeout())
+      else (Panes.byIp(events), GroupStateTimeout.NoTimeout())
+    byIp.flatMapGroupsWithState(OutputMode.Update(), timeout)(
+      new TrackFold(trackS * 1000000L, cfg, records.isStreaming).apply _)(
+      Panes.stateEnc, verdictEnc)
   }
 
   /** Bot-only projection matching the DStream sink rows `(bot_ip, reason)`

@@ -8,13 +8,15 @@
 #
 # Usage:
 #   tools/chaos.sh verify <sfDir> <outDir> [queries] [killEverySec]
-#   tools/chaos.sh stream [killEverySec]     # composed kv chain
+#   tools/chaos.sh stream [killEverySec]     # composed kv chain; StreamBench
+#                                            # exits non-zero unless the store
+#                                            # matches a batch replay
 #   tools/chaos.sh occ [killEverySec]        # OCC multi-writer + compactor
 #   tools/chaos.sh late [killEverySec]       # late/dup corpus through the
 #                                            # incremental + CDC views
 #   tools/chaos.sh verdict [killEverySec]    # late/dup corpus through the
 #                                            # bot-verdict stateful chain
-#                                            # (transformWithState/RocksDB
+#                                            # (TrackListState on RocksDB
 #                                            # + graft-kv sink)
 set -u
 cd "$(dirname "$0")/.."
