@@ -3,59 +3,46 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /**
- * Pluggable materialization barrier for operators that must cut lineage /
- * block Catalyst projection collapse (minhash signatures, LSH keys, label
+ * Materialization barrier for operators that must cut lineage / block
+ * Catalyst projection collapse (minhash signatures, LSH keys, label
  * propagation rounds, Lloyd centroids — see SCALING.md).
  *
- * Strategy comes from the session conf `spark.graft.materialize`; when the
- * conf is unset the default follows the MASTER: `localCheckpoint` on
- * `local[n]` (tasks share the driver JVM — no executor can die alone),
- * `persist` everywhere else. The executor-kill chaos axis (SCALING.md
- * round-15) proved the failure mode empirically: under local-cluster with
- * executors SIGKILLed mid-query, a localCheckpoint barrier dies
- * unrecoverably (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND ×3 → job failure) while
- * the persist barrier recomputes lost blocks from RDD lineage and finishes
+ * The strategy follows the MASTER: `localCheckpoint` on `local[n]` (tasks
+ * share the driver JVM — no executor can die alone), `persist` everywhere
+ * else. The executor-kill chaos axis (SCALING.md round-15) proved the
+ * failure mode empirically: under local-cluster with executors SIGKILLed
+ * mid-query, a localCheckpoint barrier dies unrecoverably
+ * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND ×3 → job failure) while the persist
+ * barrier recomputes lost blocks from RDD lineage and finishes
  * oracle-clean.
  *
- *   - `localCheckpoint` (default on local[n] masters): eager, executor-local
- *     blocks, lineage truncated, blocks freed by the ContextCleaner. Fastest
+ *   - `localCheckpoint` (local[n] masters): eager, executor-local blocks,
+ *     lineage truncated, blocks freed by the ContextCleaner. Fastest
  *     barrier for single-JVM runs (the bench/verify harness) — NOT
  *     fault-tolerant: a lost executor loses the blocks and the job fails.
- *   - `persist` (default on every non-local master): MEMORY_AND_DISK cache,
+ *   - `persist` (every non-local master): MEMORY_AND_DISK cache,
  *     materialized eagerly (a count runs at the barrier), then surfaced as a
  *     LEAF plan over the cached RDD (logical lineage truncated; RDD lineage
  *     kept, so executor loss recomputes instead of failing — what a cluster
  *     with churn or dynamic allocation needs). The leaf both holds the
  *     projection-collapse barrier and keeps iterative callers' plans O(1)
  *     per round.
- *   - `checkpoint`: reliable checkpoint to `spark.graft.checkpointDir` (or a
- *     previously set `sc.setCheckpointDir`) — survives executor loss AND cuts
- *     lineage; for very long iterative chains on clusters.
  *
- * Every strategy is EAGER — the barrier is fully computed when apply
+ * Both strategies are EAGER — the barrier is fully computed when apply
  * returns. That makes [[release]] of a superseded round always safe:
  * nothing downstream can trigger a recompute of a dropped barrier.
  */
 object Materialize {
 
-  /** Reliable-checkpoint files created per barrier frame, so [[release]] can
-   * delete them — the ContextCleaner only cleans checkpoints when
-   * `spark.cleaner.referenceTracking.cleanCheckpoints` was set BEFORE the
-   * context existed, which the harness (and most clusters) don't do, and
-   * iterative callers would otherwise leak one rdd-* dir per round. Keyed by
-   * DataFrame identity (Dataset doesn't override equals): callers release
-   * the exact instance apply returned. WEAK keys: a barrier that is never
-   * release()d must not pin its DataFrame (and analyzed plan) for the
-   * session lifetime — once unreachable it can't be released anyway. */
-  private val checkpointFiles =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, Seq[org.apache.hadoop.fs.Path]]())
-
   /** Persisted source behind each lineage-truncated `persist` barrier, so
    * [[release]] can unpersist the actual cache entry (unpersisting the leaf
-   * wrapper would be a no-op). Weak keys for the same reason as above;
-   * cache entries of dropped-but-unreleased barriers remain until
-   * `clearCache()`/session end, exactly as plain persist would. */
+   * wrapper would be a no-op). Keyed by DataFrame identity (Dataset doesn't
+   * override equals): callers release the exact instance apply returned.
+   * WEAK keys: a barrier that is never release()d must not pin its
+   * DataFrame (and analyzed plan) for the session lifetime — once
+   * unreachable it can't be released anyway. Cache entries of
+   * dropped-but-unreleased barriers remain until `clearCache()`/session
+   * end, exactly as plain persist would. */
   private val persistedSources =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[DataFrame, DataFrame]())
@@ -65,53 +52,30 @@ object Materialize {
   private[graft] def defaultStrategy(isLocal: Boolean): String =
     if (isLocal) "localCheckpoint" else "persist"
 
-  def apply(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get("spark.graft.materialize",
-      defaultStrategy(spark.sparkContext.isLocal)) match {
-      case "localCheckpoint" => df.localCheckpoint()
-      case "persist" =>
-        val p = df.persist()
-        p.count()
-        // Present the barrier as a LEAF plan over the cached RDD: without
-        // this, an iterative caller that references round N-1 three times
-        // per round (e.g. clusterPairs: self + neighbor + pointer-jump)
-        // grows a 3^N-node logical plan — analysis and plan-string
-        // generation blow up long before data does. RDD lineage is kept, so
-        // executor loss still recomputes (the persist strategy's point).
-        val out = org.apache.spark.sql.graftbridge.Bridge.truncateLineage(p)
-        persistedSources.put(out, p)
-        out
-      case "checkpoint" => synchronized {
-        val sc = spark.sparkContext
-        // honor the conf even if a checkpoint dir was set earlier with a
-        // different value (setCheckpointDir appends a UUID component, so
-        // compare against the parent of the current effective dir)
-        spark.conf.getOption("spark.graft.checkpointDir") match {
-          case Some(d) =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val qualified = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p).toString
-            val current = sc.getCheckpointDir
-              .map(c => new org.apache.hadoop.fs.Path(c).getParent.toString)
-            if (!current.contains(qualified)) sc.setCheckpointDir(d)
-          case None => require(sc.getCheckpointDir.nonEmpty,
-            "checkpoint strategy needs spark.graft.checkpointDir or sc.setCheckpointDir")
-        }
-        // checkpoint() is eager: the rdd-* dir exists when it returns. Read
-        // the dir straight off the returned frame's checkpointed RDD
-        // (Bridge.reliableCheckpointFile) — attributing by directory diff
-        // would misattribute concurrent checkpoints from other threads (or
-        // ContextCleaner activity) in the same dir, and a later release()
-        // would then delete ANOTHER frame's live checkpoint data.
-        val out = df.checkpoint()
-        org.apache.spark.sql.graftbridge.Bridge.reliableCheckpointFile(out)
-          .foreach(p => checkpointFiles.put(out, Seq(p)))
-        out
-      }
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize=$other (expected localCheckpoint|persist|checkpoint)")
-    }
-  }
+  private val forcePersist = new scala.util.DynamicVariable(false)
+
+  /** Runs `body` with every barrier it builds (on this thread) taking the
+   * `persist` strategy, whatever the master — the seam that lets a
+   * `local[n]` test reach the cluster barrier. */
+  private[graft] def persisting[A](body: => A): A = forcePersist.withValue(true)(body)
+
+  private def persists(df: DataFrame): Boolean =
+    forcePersist.value || defaultStrategy(df.sparkSession.sparkContext.isLocal) == "persist"
+
+  def apply(df: DataFrame): DataFrame =
+    if (persists(df)) {
+      val p = df.persist()
+      p.count()
+      // Present the barrier as a LEAF plan over the cached RDD: without
+      // this, an iterative caller that references round N-1 three times
+      // per round (e.g. clusterPairs: self + neighbor + pointer-jump)
+      // grows a 3^N-node logical plan — analysis and plan-string
+      // generation blow up long before data does. RDD lineage is kept, so
+      // executor loss still recomputes (the persist strategy's point).
+      val out = org.apache.spark.sql.graftbridge.Bridge.truncateLineage(p)
+      persistedSources.put(out, p)
+      out
+    } else df.localCheckpoint()
 
   /**
    * Materialize `df` AND run the caller's reduction over it in ONE job —
@@ -124,48 +88,30 @@ object Materialize {
    * the barrier half-materialized and a later [[release]] of its
    * predecessor unsafe.
    *
-   * Same strategy dispatch as [[apply]]; the returned frame is
+   * Same strategy choice as [[apply]]; the returned frame is
    * releasable exactly like apply's.
    */
-  def withAgg[T](df: DataFrame, action: DataFrame => T): (DataFrame, T) = {
-    val spark = df.sparkSession
-    spark.conf.get("spark.graft.materialize",
-      defaultStrategy(spark.sparkContext.isLocal)) match {
-      case "localCheckpoint" =>
-        // non-eager: the action below is the materializing job
-        val out = df.localCheckpoint(false)
-        val r = action(out)
-        (out, r)
-      case "persist" =>
-        val p = df.persist()
-        val r = action(p) // populates the cache — the fused barrier job
-        val out = org.apache.spark.sql.graftbridge.Bridge.truncateLineage(p)
-        persistedSources.put(out, p)
-        (out, r)
-      case "checkpoint" =>
-        // reliable checkpointing re-runs the RDD in its own write job
-        // regardless; nothing to fuse — keep apply's eager semantics
-        val out = apply(df)
-        (out, action(out))
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize=$other (expected localCheckpoint|persist|checkpoint)")
+  def withAgg[T](df: DataFrame, action: DataFrame => T): (DataFrame, T) =
+    if (persists(df)) {
+      val p = df.persist()
+      val r = action(p) // populates the cache — the fused barrier job
+      val out = org.apache.spark.sql.graftbridge.Bridge.truncateLineage(p)
+      persistedSources.put(out, p)
+      (out, r)
+    } else {
+      // non-eager: the action below is the materializing job
+      val out = df.localCheckpoint(false)
+      (out, action(out))
     }
-  }
 
   /** Drop a superseded materialization. Iterative callers (label
    * propagation, Lloyd rounds, farthest-first seeding) MUST release round
    * N-1 after round N exists, or the `persist` strategy pins one cache
-   * entry per round for the query's lifetime (and `checkpoint` one rdd-*
-   * dir per round). Safe because every strategy is eager: nothing
-   * downstream can recompute through a dropped barrier. No-op for frames
-   * the current strategy didn't cache or checkpoint. */
+   * entry per round for the query's lifetime. Safe because both strategies
+   * are eager: nothing downstream can recompute through a dropped barrier.
+   * No-op for frames the current strategy didn't cache. */
   def release(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
     Option(persistedSources.remove(df)).foreach(_.unpersist(blocking = false))
-    Option(checkpointFiles.remove(df)).foreach { paths =>
-      val fs = paths.headOption.map(
-        _.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration))
-      paths.foreach(p => fs.foreach(_.delete(p, true)))
-    }
   }
 }

@@ -35,26 +35,14 @@ object SparkEntry {
    * and mtimes, the same invalidation contract as the IVF-PQ artifacts. */
   private val docCountCache = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
   private def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.getOrElseUpdate((dir, srcFingerprint(dir, "documents.parquet")),
+    docCountCache.getOrElseUpdate((dir, graft.sources.Tables.fingerprint(s"$dir/documents.parquet")),
       table(s, dir, "documents").count())
 
-  /** Persisted IVF-PQ index artifacts for `dir`'s embeddings table, built at
-   * most once per sf dir (tmp path keyed by dir + format version, `_SUCCESS`
-   * markers as the built test) and reloaded from parquet on every search —
-   * IvfPqIndexSpec pins that reloaded artifacts search identically to the
-   * in-memory build. Deterministic: the build itself is deterministic on one
-   * JVM, so a rebuilt index yields the same search results. */
-  /** Fingerprint of one source table's files (name + length + mtime, MD5
-   * over the sorted tuple list): cache keys for derived artifacts must
-   * change whenever the dataset at the same path is regenerated. */
-  private def srcFingerprint(dir: String, tableFile: String): String = {
-    val d = new java.io.File(dir, tableFile)
-    val files = Option(if (d.isDirectory) d.listFiles() else Array(d))
-      .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-    val desc = files.map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
-      .sorted.mkString("\n")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+  /** Recursive delete in-process: Spark's `Utils.deleteRecursively` forks
+   * `rm -rf` on Linux. */
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete()
   }
 
   /** Deterministic JSON-lines materialization of the events table as the
@@ -63,7 +51,7 @@ object SparkEntry {
    * DSv2 SCAN, not the one-time wire-file write. */
   private def wireLogsFor(s: SparkSession, dir: String): String = {
     val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_wire_v1_" + srcFingerprint(dir, "events.parquet") + "_" +
+      "graft_wire_v1_" + graft.sources.Tables.fingerprint(s"$dir/events.parquet") + "_" +
         dir.replaceAll("[^A-Za-z0-9.]", "_"))
     if (!new java.io.File(base, "_SUCCESS").exists()) {
       table(s, dir, "events").select(to_json(struct(
@@ -88,7 +76,7 @@ object SparkEntry {
   private def cachedMediaFor(s: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
     val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_media_${tag}_v1_" + srcFingerprint(dir, "documents.parquet") + "_" +
+      s"graft_media_${tag}_v1_" + graft.sources.Tables.fingerprint(s"$dir/documents.parquet") + "_" +
         dir.replaceAll("[^A-Za-z0-9.]", "_"))
     if (!new java.io.File(base, "_SUCCESS").exists())
       build.write.mode("overwrite").parquet(base.toString)
@@ -108,7 +96,7 @@ object SparkEntry {
    * loses to an already-complete winner. */
   private def layoutFixtureFor(s: SparkSession, dir: String): String = {
     val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_layout_v2_" + srcFingerprint(dir, "lineitem.parquet") + "_" +
+      "graft_layout_v2_" + graft.sources.Tables.fingerprint(s"$dir/lineitem.parquet") + "_" +
         dir.replaceAll("[^A-Za-z0-9.]", "_"))
     if (!new java.io.File(base, "_DONE").exists()) {
       val tmp = new java.io.File(base.getParentFile,
@@ -118,13 +106,7 @@ object SparkEntry {
         li.filter(col("l_orderkey") % 4 === b).coalesce(1)
           .write.mode("append").parquet(tmp.toString))
       new java.io.File(tmp, "_DONE").createNewFile()
-      if (!tmp.renameTo(base)) { // lost the install race: winner is complete
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete()
-        }
-        rm(tmp)
-      }
+      if (!tmp.renameTo(base)) rmTree(tmp) // lost the install race: winner is complete
     }
     base.toString
   }
@@ -151,6 +133,12 @@ object SparkEntry {
       .withColumn("id_b", col("c_custkey_b"))
   }
 
+  /** Persisted IVF-PQ index artifacts for `dir`'s embeddings table, built at
+   * most once per sf dir (tmp path keyed by dir + format version, `_SUCCESS`
+   * markers as the built test) and reloaded from parquet on every search —
+   * IvfPqIndexSpec pins that reloaded artifacts search identically to the
+   * in-memory build. Deterministic: the build itself is deterministic on one
+   * JVM, so a rebuilt index yields the same search results. */
   private def ivfPqIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     // cache key includes a fingerprint of the SOURCE data (per-file name +
     // length + mtime): a regenerated dataset at the same path must rebuild
@@ -158,7 +146,7 @@ object SparkEntry {
     // list, not an XOR fold — XOR is order-independent and self-canceling
     // (two files swapping identical attrs, or a pair of equal contributions,
     // collide to the same key).
-    val srcFp = srcFingerprint(dir, "embeddings.parquet")
+    val srcFp = graft.sources.Tables.fingerprint(s"$dir/embeddings.parquet")
     // v2: the index corpus is the synthetic twin construction (same ids as
     // the source embeddings), so embed_ivfpq_search's persisted-artifact
     // round-trip is oracle-gated like embed_pq — a v1 cache built from the
@@ -374,11 +362,7 @@ object SparkEntry {
     "k_kv_roundtrip" -> ((s, dir) => {
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_kv_rt_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(base)
+      rmTree(base)
       botDetect(s, dir).write.format("graft-kv")
         .option("path", base.toString).mode("append").save()
       graft.sinks.v2.KvStore.readCurrent(s, base.toString, Seq("ip", "window_start_s"))
@@ -397,11 +381,7 @@ object SparkEntry {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val cat = s"graftkv_$tag"
       val wh = new java.io.File(sys.props("java.io.tmpdir"), s"graft_kvcat_q_$tag")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(wh)
+      rmTree(wh)
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sinks.v2.GraftKvCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
       s.sql(s"DROP TABLE IF EXISTS $cat.cat.agg") // same-dir rerun (bench best-of-N)
@@ -424,11 +404,7 @@ object SparkEntry {
     "k_kv_upsert" -> ((s, dir) => {
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_kv_ups_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(base)
+      rmTree(base)
       val orders = table(s, dir, "orders")
       orders.filter(col("o_orderkey") % 4 === 0)
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"),
@@ -457,11 +433,7 @@ object SparkEntry {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val cat = s"graftkvmrg_$tag"
       val wh = new java.io.File(sys.props("java.io.tmpdir"), s"graft_kvmrg_q_$tag")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(wh)
+      rmTree(wh)
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sinks.v2.GraftKvCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
       s.sql(s"DROP TABLE IF EXISTS $cat.cat.m") // same-dir rerun (bench best-of-N)

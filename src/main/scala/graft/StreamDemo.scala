@@ -145,14 +145,18 @@ object StreamDemo {
           .as[graft.model.LogRecord],
         BotConfig(requestLimit = 500, categoryLimit = 5, clicksToViewsLimit = 5))
       .toDF("bot_ip", "reason")
-    val q2 = trackVerdicts.writeStream
-      .outputMode("update")
-      .foreachBatch(Sinks.parquetAppend(out2) _)
-      .option("checkpointLocation", ckpt2)
-      .start()
-    // rate source is unbounded: let a handful of micro-batches run
-    Thread.sleep(8000)
-    q2.stop()
+    // the rate source is unbounded, but an AvailableNow run admits exactly
+    // one micro-batch of it: a fixed number of runs on one checkpoint is a
+    // deterministic E2 that never stops a query mid-write
+    (1 to 6).foreach { _ =>
+      trackVerdicts.writeStream
+        .outputMode("update")
+        .foreachBatch(Sinks.parquetAppend(out2) _)
+        .option("checkpointLocation", ckpt2)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
     val bots = Sinks.readVerdicts(spark, out2, Seq("bot_ip"))
     println(s"=== E2 (track-list) bot verdicts: ${bots.count()}")
     bots.groupBy("reason").count().show(false)

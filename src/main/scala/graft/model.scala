@@ -59,7 +59,8 @@ object model {
 
   object IpStat {
     val empty: IpStat = IpStat(0L, 0L, Set.empty)
-    def fromRecord(r: LogRecord): IpStat = IpStat(r.clicks, r.views, Set(r.category))
+    /** A null category is no category (DuckDB, `collect_set`, `Panes.fold`). */
+    def fromRecord(r: LogRecord): IpStat = IpStat(r.clicks, r.views, Option(r.category).toSet)
   }
 
   /** Windowed aggregate keyed by ip (reference `Common.scala:87`). */

@@ -334,13 +334,13 @@ object Dedup {
 
   /** Candidate pairs = docs sharing any LSH bucket (deduped across bands).
    * The join is on (band, bucket) — shuffle ∝ corpus size, never all-pairs.
-   * Signatures are materialized first ([[graft.Materialize]], strategy via
-   * `spark.graft.materialize`): Catalyst's projection collapse would
-   * otherwise inline the whole minhash pipeline into EVERY band expression
-   * and the self-join sides (measured 347 s → ~10 s at sf0.1). The barrier
-   * strategy defaults by master — localCheckpoint on local[n], persist
-   * (executor-loss-safe) on anything else; see [[graft.Materialize]] and the
-   * executor-kill chaos evidence in SCALING.md round-15. */
+   * Signatures are materialized first ([[graft.Materialize]]): Catalyst's
+   * projection collapse would otherwise inline the whole minhash pipeline
+   * into EVERY band expression and the self-join sides (measured 347 s →
+   * ~10 s at sf0.1). The barrier strategy follows the master —
+   * localCheckpoint on local[n], persist (executor-loss-safe) on anything
+   * else; see [[graft.Materialize]] and the executor-kill chaos evidence in
+   * SCALING.md round-15. */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 64, bands: Int = 16,
       maxBucketFreq: Option[Int] = None): DataFrame = {

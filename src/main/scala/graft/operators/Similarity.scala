@@ -261,7 +261,7 @@ object Similarity {
   private def lshNearDupPairsFixed(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double, nPlanes: Int, tables: Int,
       nRows: Long): DataFrame = {
-    // materialized (graft.Materialize — strategy via spark.graft.materialize):
+    // materialized (graft.Materialize — strategy by master):
     // projection collapse would re-inline the tables×nPlanes dot products
     // into both self-join sides (same blow-up as minhashCandidates)
     // all tables' bucket ids in ONE codegen'd pass over the vector — the

@@ -1863,56 +1863,6 @@ class KvReaderFactory(out: StructType, conf: Broadcast[SerializableConfiguration
       override def close(): Unit = reader.close()
     }
   }
-
-  /** Vectorized path, the `graft-logs` pattern: scans hand Spark 4096-row
-   * `ColumnarBatch`es consumed through `ColumnarToRow`, skipping per-row
-   * iterator virtual calls between the JSON decode and the first stage. */
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.ColumnarBatch
-    val rows = createReader(partition)
-    new PartitionReader[ColumnarBatch] {
-      private val capacity = 4096
-      private val vectors = OnHeapColumnVector.allocateColumns(capacity, out)
-      private val batch = new ColumnarBatch(
-        vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector])
-
-      override def next(): Boolean = {
-        vectors.foreach(_.reset())
-        var n = 0
-        while (n < capacity && rows.next()) {
-          val r = rows.get()
-          var c = 0
-          while (c < out.length) {
-            if (r.isNullAt(c)) vectors(c).putNull(n)
-            else out.fields(c).dataType match {
-              case LongType => vectors(c).putLong(n, r.getLong(c))
-              case IntegerType => vectors(c).putInt(n, r.getInt(c))
-              case DoubleType => vectors(c).putDouble(n, r.getDouble(c))
-              case BooleanType => vectors(c).putBoolean(n, r.getBoolean(c))
-              case StringType =>
-                val b = r.getUTF8String(c).getBytes
-                vectors(c).putByteArray(n, b, 0, b.length)
-              case other => throw new IllegalStateException(s"graft-kv: $other")
-            }
-            c += 1
-          }
-          n += 1
-        }
-        batch.setNumRows(n)
-        n > 0
-      }
-      override def get(): ColumnarBatch = batch
-      // forward the row reader's counters (dv skips) through the batch face
-      override def currentMetricsValues()
-          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        rows.currentMetricsValues()
-      override def close(): Unit = { rows.close(); batch.close() }
-    }
-  }
 }
 
 // ------------------------------------------------------------------ write

@@ -32,15 +32,17 @@ object Tables {
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  private def fileFingerprint(path: String): String = {
+  /** Fingerprint of a table's files (name + length + mtime, MD5 over the
+   * sorted list, 16 hex chars): cache keys for schemas and derived
+   * artifacts change whenever the dataset at the same path is regenerated. */
+  private[graft] def fingerprint(path: String): String = {
     val root = new java.io.File(path)
-    val files =
-      if (root.isDirectory) Option(root.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      else Seq(root)
-    files.filter(_.isFile)
-      .map(f => (f.getName, f.length, f.lastModified))
-      .sortBy(_._1)
-      .mkString(";")
+    val files = Option(if (root.isDirectory) root.listFiles() else Array(root))
+      .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
+    val desc = files.map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
+      .sorted.mkString("\n")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(desc.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
   }
 
   /** Parquet read with the schema served from the memo when the path's
@@ -49,7 +51,7 @@ object Tables {
    * (changed files → changed key → re-infer) but stay correct. */
   def readMemoized(spark: SparkSession, path: String): DataFrame = {
     val schema = schemaMemo.computeIfAbsent(
-      path + "|" + fileFingerprint(path),
+      path + "|" + fingerprint(path),
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }

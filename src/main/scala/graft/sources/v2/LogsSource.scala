@@ -338,49 +338,6 @@ class LogsPartitionReaderFactory(readSchema: StructType, filters: Array[Filter],
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new LogsPartitionReader(partition.asInstanceOf[LogsInputPartition],
       readSchema, filters, conf.value.value, limit, countStar)
-
-  /** Vectorized path: plain scans hand Spark `ColumnarBatch`es (4096 rows)
-   * instead of one InternalRow per `next()` — the downstream stage reads
-   * columns through `ColumnarToRow`, skipping per-row iterator virtual
-   * calls. A pushed COUNT(*) stays row-based (it emits a single row). */
-  override def supportColumnarReads(partition: InputPartition): Boolean = !countStar
-
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.ColumnarBatch
-    val rows = new LogsPartitionReader(partition.asInstanceOf[LogsInputPartition],
-      readSchema, filters, conf.value.value, limit, countStar)
-    new PartitionReader[ColumnarBatch] {
-      private val capacity = 4096
-      private val vectors = OnHeapColumnVector.allocateColumns(capacity, readSchema)
-      private val batch = new ColumnarBatch(vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector])
-
-      override def next(): Boolean = {
-        vectors.foreach(_.reset())
-        var n = 0
-        while (n < capacity && rows.next()) {
-          val r = rows.get()
-          var c = 0
-          while (c < readSchema.length) {
-            if (r.isNullAt(c)) vectors(c).putNull(n)
-            else readSchema.fields(c).dataType match {
-              case LongType => vectors(c).putLong(n, r.getLong(c))
-              case StringType =>
-                val b = r.getUTF8String(c).getBytes
-                vectors(c).putByteArray(n, b, 0, b.length)
-              case other => throw new IllegalStateException(s"graft-logs: $other")
-            }
-            c += 1
-          }
-          n += 1
-        }
-        batch.setNumRows(n)
-        n > 0
-      }
-      override def get(): ColumnarBatch = batch
-      override def close(): Unit = { rows.close(); batch.close() }
-    }
-  }
 }
 
 /**

@@ -49,14 +49,4 @@ object Bridge {
     ofRows(ds.sparkSession,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
   }
-
-  /** The reliable-checkpoint dir of a frame returned by `df.checkpoint()`:
-   * read straight off the `LogicalRDD` leaf's RDD (`getCheckpointFile`
-   * resolves through the RDD's own `checkpointData`), so the path is
-   * attributed to EXACTLY this frame — never inferred from directory
-   * listings that concurrent checkpointers could race. */
-  def reliableCheckpointFile(df: DataFrame): Option[org.apache.hadoop.fs.Path] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.flatMap(_.getCheckpointFile).map(new org.apache.hadoop.fs.Path(_))
 }

@@ -99,4 +99,15 @@ class BotClassifierSpec extends AnyFunSuite {
       assert((IpStat.empty + a) === a)
     }
   }
+
+  test("a null category is not a category in the typed IpStat aggregate") {
+    import graft.functions.IpStatAggregator
+    import graft.model.LogRecord
+    val t = new java.sql.Timestamp(0L)
+    val stat = Seq(LogRecord("ip", t, 1L, 0L, "c1"), LogRecord("ip", t, 0L, 1L, null))
+      .foldLeft(IpStatAggregator.zero)(IpStatAggregator.reduce)
+    assert(stat === IpStat(1L, 1L, Set("c1")))
+    // a3_typed_agg's csv rendering sorts the set
+    assert(stat.categories.toSeq.sorted.mkString(",") === "c1")
+  }
 }

@@ -593,19 +593,18 @@ class KvStoreSpec extends AnyFunSuite {
     assert(KvStore.read(spark, p).count() === 1)
   }
 
-  test("kv scans read through the columnar path (ColumnarToRow over BatchScan)") {
+  test("kv scans decode every stored type and nulls") {
     val p = tmp()
-    Seq((1L, "a", 1.5, true), (2L, null.asInstanceOf[String], -0.25, false))
-      .toDF("k", "s", "d", "b")
+    Seq((1L, "a", 1.5, true, Some(7)), (2L, null.asInstanceOf[String], -0.25, false, None))
+      .toDF("k", "s", "d", "b", "i")
       .write.format("graft-kv").option("path", p).mode("append").save()
-    val df = KvStore.read(spark, p).select("k", "s", "d", "b")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), plan)
-    // values (incl. nulls and every supported type) survive the batch copy
+    val df = KvStore.read(spark, p).select("k", "s", "d", "b", "i")
+    // values (incl. nulls and every supported type) survive the row decode
     val rows = df.collect().sortBy(_.getLong(0))
     assert(rows(0).getLong(0) === 1L && rows(0).getString(1) === "a" &&
-      rows(0).getDouble(2) === 1.5 && rows(0).getBoolean(3))
-    assert(rows(1).isNullAt(1) && rows(1).getDouble(2) === -0.25 && !rows(1).getBoolean(3))
+      rows(0).getDouble(2) === 1.5 && rows(0).getBoolean(3) && rows(0).getInt(4) === 7)
+    assert(rows(1).isNullAt(1) && rows(1).getDouble(2) === -0.25 && !rows(1).getBoolean(3) &&
+      rows(1).isNullAt(4))
   }
 
   test("runtime filter injection prunes segments at execution (DPP contract)") {

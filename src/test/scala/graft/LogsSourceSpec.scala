@@ -186,13 +186,18 @@ class LogsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(logs().where(col("action") === "click").limit(2).collect().length === 2)
   }
 
-  test("plain scans take the vectorized path; a pushed count stays row-based") {
-    val plan = logs().where(col("action") === "click").select("ip")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), s"expected the columnar path:\n$plan")
-    val countPlan = logs().groupBy().count().queryExecution.executedPlan.toString
-    assert(!countPlan.contains("ColumnarToRow"),
-      s"a pushed COUNT(*) emits one row per split, not batches:\n$countPlan")
+  test("a pushed COUNT(*) emits one partial row per split") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val counting = logs("maxSplitBytes" -> "40").groupBy().count()
+    val plan = counting.queryExecution.sparkPlan
+    assert(plan.toString.contains("PushedAggregates: [COUNT(*)]"), plan.toString)
+    val scan = plan.collectFirst { case b: BatchScanExec => b }.get
+    val splits = scan.inputRDD.partitions.length
+    assert(splits > 2, s"expected several splits, got $splits")
+    // one partial count per split; Spark's final aggregate sums them
+    val partials = scan.execute().map(_.getLong(0)).collect()
+    assert(partials.length === splits && partials.sum === 7)
+    assert(counting.collect().head.getLong(0) === 7)
   }
 
   test("the scan reports byte statistics for the optimizer") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,64 +19,18 @@ class MaterializeSpec extends AnyFunSuite {
     assert(Materialize.defaultStrategy(isLocal = false) == "persist")
   }
 
-  private def withStrategy[A](strategy: String, ckDir: Option[String] = None)(f: => A): A = {
-    spark.conf.set("spark.graft.materialize", strategy)
-    // these specs exercise the ITERATIVE (distributed) clusterPairs route;
-    // without this the small test graphs take the driver union-find
-    // shortcut and the per-round barrier machinery under test never runs
+  // these specs exercise the ITERATIVE (distributed) clusterPairs route;
+  // without the route override the small test graphs take the driver
+  // union-find shortcut and the per-round barrier machinery never runs
+  private def persistingDistributed[A](f: => A): A = {
     spark.conf.set("spark.graft.localRouteMaxRows", "0")
-    ckDir.foreach(spark.conf.set("spark.graft.checkpointDir", _))
-    try f finally {
-      spark.conf.unset("spark.graft.materialize")
+    try Materialize.persisting(f) finally {
       spark.conf.unset("spark.graft.localRouteMaxRows")
-      spark.conf.unset("spark.graft.checkpointDir")
       spark.catalog.clearCache()
     }
   }
 
-  private def rddDirs(ckRoot: java.io.File): Set[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) :+ f else Seq(f)
-    walk(ckRoot).filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
-      .map(_.getAbsolutePath).toSet
-  }
-
-  test("checkpoint strategy writes files and release() deletes exactly the released frame's") {
-    val dir = Files.createTempDirectory("graft-ck").toFile
-    withStrategy("checkpoint", Some(dir.getAbsolutePath)) {
-      val a = Materialize(Seq(1, 2, 3).toDF("x"))
-      val dirsAfterA = rddDirs(dir)
-      assert(dirsAfterA.nonEmpty, "checkpoint strategy should write rdd-* dirs")
-      val b = Materialize(Seq(4, 5).toDF("x"))
-      val dirsAfterB = rddDirs(dir)
-      assert(dirsAfterB.size > dirsAfterA.size)
-      Materialize.release(a)
-      assert(rddDirs(dir) === (dirsAfterB -- dirsAfterA), "release(a) removes only a's dirs")
-      // released frame's data must not be needed: b still readable
-      assert(b.count() === 2)
-      Materialize.release(b)
-      assert(rddDirs(dir).isEmpty, "all checkpoints cleaned after release")
-    }
-  }
-
-  test("iterative clusterPairs leaves no checkpoint dirs behind under checkpoint strategy") {
-    val dir = Files.createTempDirectory("graft-ck-iter").toFile
-    withStrategy("checkpoint", Some(dir.getAbsolutePath)) {
-      // chain graph 1-2-3-4-5 plus isolated pair 10-11: multi-round convergence
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-        .toDF("id_a", "id_b")
-      val labels = Dedup.clusterPairs(pairs)
-      val out = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert((1L to 5L).forall(out(_) == 1L) && out(10L) == 10L && out(11L) == 10L)
-      // clusterPairs frees its internal frames; the returned barrier is the
-      // only checkpoint left, and releasing it leaves nothing behind
-      Materialize.release(labels)
-      val leftover = rddDirs(dir)
-      assert(leftover.isEmpty, s"expected no checkpoints to remain, got $leftover")
-    }
-  }
-
-  test("clusterPairs converges identically under all three strategies") {
+  test("clusterPairs converges identically under both strategies") {
     // two components with a long chain — exercises pointer jumping
     val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
       .union(Seq((100L, 101L)).toDF("id_a", "id_b"))
@@ -86,11 +38,7 @@ class MaterializeSpec extends AnyFunSuite {
       Dedup.clusterPairs(pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val local = run()
     assert((1L to 12L).forall(local(_) == 1L) && local(101L) == 100L)
-    val dir = Files.createTempDirectory("graft-ck-strat").toFile
-    val persisted = withStrategy("persist")(run())
-    val checkpointed = withStrategy("checkpoint", Some(dir.getAbsolutePath))(run())
-    assert(persisted === local)
-    assert(checkpointed === local)
+    assert(persistingDistributed(run()) === local)
   }
 
   test("withAgg fuses barrier + reduction into ONE job (persist strategy)") {
@@ -100,7 +48,7 @@ class MaterializeSpec extends AnyFunSuite {
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         n.incrementAndGet()
     }
-    withStrategy("persist") {
+    persistingDistributed {
       val src = spark.range(0, 1000L).selectExpr("id", "id % 7 as k")
       def countJobs[A](f: => A): (A, Int) = {
         val l = new JobCount
@@ -114,6 +62,8 @@ class MaterializeSpec extends AnyFunSuite {
       // baseline: eager barrier THEN the reduction — two scheduled actions
       val (_, unfusedJobs) = countJobs {
         val b = Materialize(src)
+        // the seam reached the persist barrier on this local[n] master
+        assert(src.storageLevel.useDisk, "persisting must cache the source")
         val c = b.filter(col("k") === 0).count()
         Materialize.release(b)
         c

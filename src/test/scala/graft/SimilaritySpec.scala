@@ -287,14 +287,8 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.ivfTopK(e, "vec_id", "embedding", col("vec_id") < 10, k = 3, nCells = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val local = run()
-    spark.conf.set("spark.graft.materialize", "persist")
-    try {
-      val persisted = run()
-      assert(persisted === local)
-    } finally {
-      spark.conf.unset("spark.graft.materialize")
-      spark.catalog.clearCache()
-    }
+    try assert(Materialize.persisting(run()) === local)
+    finally spark.catalog.clearCache()
   }
 
   test("farthest-first seeds spread wider than first-k-ids seeds and are deterministic") {

@@ -308,7 +308,7 @@ class TrackListStateSpec extends AnyFunSuite {
   test("a null category is not a category") {
     import spark.implicits._
     // five named categories and a null: over the limit of 5 only if the
-    // null counted, as IpStat.fromRecord's Set(category) did
+    // null counted
     val rows = (0 until 5).map(i => view("ip", i.toLong, s"c$i")) :+ view("ip", 5, null)
     val batch = TrackListState.verdicts(rows.toDS()).collect().toSeq
     assert(batch === Seq(EvaluatedStat("ip", 0L, 6L, 5L, isBot = false, "clear")))
